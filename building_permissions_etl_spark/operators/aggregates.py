@@ -25,7 +25,10 @@ def pivot_counts(
 ) -> DataFrame:
     """A1: one row per ``key``, one count column per ``cell_values`` entry.
 
-    ``cell_col`` is typically a pre-concatenated ``type_category`` column.
+    ``cell_col`` is typically a pre-concatenated ``type_category`` column;
+    pivoting the type column alone gives the per-type marginals (A2,
+    helpers:445-472), where an absent type still yields a zero column —
+    the reference's forced-0 branch (helpers:470-472).
     One shuffle (the groupBy); map-side partial aggregation is automatic.
     """
     out = df.groupBy(key).pivot(cell_col, cell_values).count().na.fill(0)
@@ -34,57 +37,21 @@ def pivot_counts(
     return out
 
 
-def marginal_counts(
-    df: DataFrame,
-    key: str,
-    type_col: str,
-    type_values: list[str],
-    suffix: str = "",
-) -> DataFrame:
-    """A2: per-type marginal counts per key, zero where absent
-    (helpers:445-472). Explicit value list ⇒ absent type still yields a
-    zero column, matching the reference's forced-0 branch (helpers:470-472).
-    """
-    out = df.groupBy(key).pivot(type_col, type_values).count().na.fill(0)
-    for v in type_values:
-        out = out.withColumnRenamed(v, f"{v}{suffix}")
-    return out
-
-
-def windowed_conditional_counts(
-    df: DataFrame,
-    key: str,
-    cell_col: str,
-    cell_values: list[str],
-    time_col: str,
-    windows: dict[str, "F.Column"],
-) -> DataFrame:
-    """Single-pass variant of (3 × filter → pivot → full-outer-join).
-
-    The reference aggregates three filtered copies of one frame and outer-
-    joins them (helpers:351-362,535-553). Idiomatic Spark does it in ONE
-    shuffle with conditional aggregation::
-
-        count(when(in_window & cell == v, 1)) per (window, value)
-
-    ``windows`` maps suffix → boolean Column over ``time_col``. The n-pass
-    shape is kept too (plans/flagship.py) as the parity-checkable form; a
-    parity test pins both to the same result.
-    """
-    aggs = windowed_count_exprs(cell_col, cell_values, windows)
-    return df.groupBy(key).agg(*aggs)
-
-
 def windowed_count_exprs(
     cell_col: str,
     cell_values: list[str],
     windows: dict[str, "F.Column"],
     alias_fmt=lambda v, w: f"{v}_{w}",
 ) -> list:
-    """The conditional-count expression list behind
-    ``windowed_conditional_counts``, exposed so composite single-shuffle
-    aggregates (flagship: cells + return-flag marginals in ONE groupBy)
-    build from the same implementation instead of re-inlining it."""
+    """Single-pass form of (3 × filter → pivot → full-outer-join): one
+    ``count(when(in_window & cell == v, 1))`` per (window, value).
+
+    The reference aggregates three filtered copies of one frame and outer-
+    joins them (helpers:351-362,535-553); passing these expressions to ONE
+    ``groupBy(key).agg`` does it in one shuffle. ``windows`` maps suffix →
+    boolean Column. Composite aggregates (the ETL's cells + per-rodzaj
+    marginals, the registry flagship's cells + return-flag marginals)
+    concatenate several lists into that one groupBy."""
     return [
         F.count(F.when(wpred & (F.col(cell_col) == v), 1))
         .alias(alias_fmt(v, wname))

@@ -122,33 +122,29 @@ def range_join_binned(
 ) -> DataFrame:
     """All (left, right) pairs with the same key whose timestamps differ
     by at most ``tolerance_seconds``. Equi-join on (key, bin±1) bounds
-    candidates; the exact |Δt| predicate filters after."""
-    tol = tolerance_seconds
+    candidates; the exact |Δt| predicate filters after, in microseconds
+    so a sub-second difference counts (DuckDB's ``epoch`` keeps it)."""
+    tol = tolerance_seconds * 1_000_000
 
     # cast("timestamp") first: no-op for ltz, the only legal epoch route
     # for NTZ input (long-typed inputs also survive the double cast).
-    def _epoch(c):
-        return F.col(c).cast("timestamp").cast("long")
+    def _micros(c):
+        return F.unix_micros(F.col(c).cast("timestamp"))
 
-    lb = (_epoch(left_ts) / tol).cast("long")
+    lus, rus = _micros(left_ts), _micros(right_ts)
+    lb = (lus / tol).cast("long")
     l = left.select(
         F.col(key).alias("__lk"), F.col(left_ts).alias("__lts"),
+        lus.alias("__lus"),
         F.explode(F.array(lb - 1, lb, lb + 1)).alias("__bin"),
     )
-    rb = (_epoch(right_ts) / tol).cast("long")
     r = right.select(
         F.col(key).alias("__rk"), F.col(right_ts).alias("__rts"),
-        rb.alias("__bin"),
+        rus.alias("__rus"), (rus / tol).cast("long").alias("__bin"),
     )
     return (
         l.join(r, (l["__lk"] == r["__rk"]) & (l["__bin"] == r["__bin"]))
-        .filter(
-            F.abs(
-                F.col("__lts").cast("timestamp").cast("long")
-                - F.col("__rts").cast("timestamp").cast("long")
-            )
-            <= tol
-        )
+        .filter(F.abs(F.col("__lus") - F.col("__rus")) <= tol)
         .select(
             F.col("__lk").alias(key),
             F.col("__lts").alias(left_ts),

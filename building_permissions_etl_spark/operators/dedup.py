@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import os as _os
 import threading as _threading
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -186,7 +187,8 @@ DEFAULT_MAX_BUCKET = 1000
 
 
 def _bucket_pairs(banded: DataFrame, keys: list[str], max_bucket: int | None,
-                  pair_cols: list[str], score=None,
+                  pair_cols: list[str],
+                  score: Callable[[Column, Column], Column] | None = None,
                   score_name: str = "score") -> DataFrame:
     """Ordered within-bucket pairs WITHOUT a self-join: group the banded
     rows by bucket key, drop over-cap buckets on the grouped row, and

@@ -11,10 +11,13 @@ broadcast):
     clustered write (S4).
 
 Aggregate (the flagship, §3.3): 3-month scan with pushed-down predicate
-(S7) → county prefix (C1) → per-window pivot counts (A1) + per-type
-marginals (A2) → deromanized/sanitized names (C4/C21) → full-outer merge
-(J1) → injection date/reorder/rename (C19/F9/F10) → dim anti-join (J2) →
-dim completion (J3+U1) → sort (O1) → schema-evolving append (S13).
+(S7) → county prefix (C1) → one small aggregate finding each window's
+observed (rodzaj, kategoria) cells → ONE groupBy of conditional counts
+for all three windows: pivot cells (A1) + per-type marginals (A2), named
+deromanized/sanitized (C4/C21) — the same single-pass shape as
+``plans/flagship.py::flagship_single_pass`` → injection date/reorder/
+rename (C19/F9/F10) → dim completion as one left join (J2+J3+U1) → sort
+(O1) → schema-evolving append (S13).
 """
 
 from __future__ import annotations
@@ -26,11 +29,8 @@ from pyspark.sql import functions as F
 
 from building_permissions_etl_spark.functions.roman import INT_OF_ROMAN
 from building_permissions_etl_spark.functions.text import sanitize_column_names
-from building_permissions_etl_spark.operators.aggregates import pivot_counts
-from building_permissions_etl_spark.operators.joins import (
-    complete_via_left_join,
-    outer_merge_zero_fill,
-)
+from building_permissions_etl_spark.operators.aggregates import windowed_count_exprs
+from building_permissions_etl_spark.operators.joins import complete_via_left_join
 from building_permissions_etl_spark.operators.terc import (
     correct_terc,
     correction_audit_metrics,
@@ -107,42 +107,14 @@ def _short_rodzaj(r: str) -> str:
     return r.split(" ")[0].split("/")[0]
 
 
-def _deromanize(kat: str) -> str:
-    """C4 (helpers:517-533): roman category → kat_{n}."""
-    return f"kat_{INT_OF_ROMAN[kat]}" if kat in INT_OF_ROMAN else kat
-
-
-def aggregate_window(df: DataFrame, suffix: str) -> DataFrame:
-    """A1+A2 for one lookback window (helpers:429-481): pivot counts per
-    county × (rodzaj × kategoria) + per-rodzaj marginals, zero-filled,
-    with the reference's renamed column shapes."""
-    cells = df.withColumn(
-        "cell", F.concat_ws("|", F.col("rodzaj_zam_budowlanego"), F.col("kategoria"))
-    )
-    # DYNAMIC pivot, observed combos only — reference parity: pandas
-    # pivot_table mints columns per observed (rodzaj, kategoria) pair
-    # (helpers:431), which is exactly what feeds the sink's schema
-    # evolution (S13). The domain is bounded (≤ 5×30, SURVEY.md §7 risk
-    # 4), so the auto-distinct pivot scan stays cheap at any scale.
-    pivoted = cells.groupBy("terc").pivot("cell").count().na.fill(0)
-    renames = {
-        f"{r}|{k}": sanitize_column_names(
-            [f"{_short_rodzaj(r)}_{_deromanize(k)}_{suffix}"]
-        )[0]
-        for r in EXPECTED_RODZAJ_TYPES for k in INT_OF_ROMAN
-    }
-    pivoted = pivoted.toDF(*[
-        renames.get(c, sanitize_column_names([f"{c}_{suffix}"])[0]) if c != "terc" else c
-        for c in pivoted.columns
-    ])
-
-    margins = pivot_counts(df, "terc", "rodzaj_zam_budowlanego", EXPECTED_RODZAJ_TYPES)
-    margin_renames = {
-        r: sanitize_column_names([f"{_short_rodzaj(r)}_{suffix}"])[0]
-        for r in EXPECTED_RODZAJ_TYPES
-    }
-    margins = margins.toDF(*[margin_renames.get(c, c) for c in margins.columns])
-    return pivoted.join(margins, on="terc", how="full_outer").na.fill(0)
+def _cell_column(cell: str, suffix: str) -> str:
+    """Sink column name of one ``rodzaj|kategoria`` pivot cell in one
+    window: short rodzaj + deromanized kategoria (C4, helpers:517-533),
+    sanitized (C21). A cell outside the known domain keeps its raw text."""
+    r, _, k = cell.partition("|")
+    if r in EXPECTED_RODZAJ_TYPES and k in INT_OF_ROMAN:
+        cell = f"{_short_rodzaj(r)}_kat_{INT_OF_ROMAN[k]}"
+    return sanitize_column_names([f"{cell}_{suffix}"])[0]
 
 
 def superior_aggregates(
@@ -169,42 +141,53 @@ def superior_aggregates(
     # INTERVAL arithmetic preserves the logical date's time-of-day
     # (add_months coerces to DATE and would snap a midday logical date
     # to midnight, mirroring nothing in the reference's relativedelta)
-    lo = F.lit(execution_date).cast("timestamp") - F.expr("INTERVAL 3 MONTHS")
+    end = F.lit(execution_date).cast("timestamp")
+    lo = end - F.expr("INTERVAL 3 MONTHS")
     base = fact.filter(
         (t >= lo) & (t < F.lit(execution_date))
         & (F.col(MONTH_COL) >= F.date_format(lo, "yyyy-MM"))
         & (F.col(MONTH_COL)
            <= F.date_format(F.lit(execution_date), "yyyy-MM"))
-    ).withColumn("terc", F.substring("terc", 1, 4)).cache()
-
+    ).select(
+        F.substring("terc", 1, 4).alias("unit_id"),
+        "rodzaj_zam_budowlanego",
+        F.concat_ws("|", "rodzaj_zam_budowlanego", "kategoria").alias("cell"),
+        EVENT_TIME_COL,
+    )
     windows = {
-        "3m": base,
-        "2m": base.filter(t >= F.lit(execution_date).cast("timestamp")
-                          - F.expr("INTERVAL 2 MONTHS")),
-        "1m": base.filter(t >= F.lit(execution_date).cast("timestamp")
-                          - F.expr("INTERVAL 1 MONTH")),
+        "3m": F.lit(True),
+        "2m": t >= end - F.expr("INTERVAL 2 MONTHS"),
+        "1m": t >= end - F.expr("INTERVAL 1 MONTH"),
     }
-    aggs = [aggregate_window(wdf, s) for s, wdf in windows.items()]
-    merged = outer_merge_zero_fill(aggs, "terc")
+
+    # Observed cells only — reference parity: pandas pivot_table mints
+    # columns per observed (rodzaj, kategoria) pair (helpers:431), which
+    # is exactly what feeds the sink's schema evolution (S13). One small
+    # aggregate flags which windows saw each cell; the domain is bounded
+    # (≤ 5×30 rows, SURVEY.md §7 risk 4). Cells keep pivot()'s ascending
+    # order, then come the five marginals.
+    seen = base.groupBy("cell").agg(
+        *[F.max(pred).alias(s) for s, pred in windows.items()]
+    ).collect()
+    counts = []
+    for suffix, pred in windows.items():
+        cells = sorted(r["cell"] for r in seen if r[suffix])
+        counts += windowed_count_exprs(
+            "cell", cells, {suffix: pred}, alias_fmt=_cell_column)
+        counts += windowed_count_exprs(
+            "rodzaj_zam_budowlanego", EXPECTED_RODZAJ_TYPES, {suffix: pred},
+            alias_fmt=lambda r, s: sanitize_column_names([f"{_short_rodzaj(r)}_{s}"])[0])
 
     inj = execution_date.strftime("%Y-%m-%d %H:%M:%S.%f")[:-3] + " UTC"
-    merged = merged.withColumn("injection_date", F.lit(inj)).withColumnRenamed(
-        "terc", "unit_id"
-    )
-    ordered = ["unit_id", "injection_date"] + [
-        c for c in merged.columns if c not in ("unit_id", "injection_date")
-    ]
-    merged = merged.select(*ordered)
+    agg = base.groupBy("unit_id").agg(*counts)
+    agg = agg.select("unit_id", F.lit(inj).alias("injection_date"), *agg.columns[1:])
 
-    dim = powiaty.select("JPT_KOD_JE")
-    # fused J2+J3+U1: the semi+anti+union shape references `merged` twice
-    # and would evaluate the whole 3-window pivot subtree twice (only
-    # `base` is cached) — complete_via_left_join is the single-evaluation
-    # form this module's own joins.py documents as "the one to run"
-    merged = complete_via_left_join(
-        merged, dim, "unit_id", "JPT_KOD_JE",
+    # fused J2+J3+U1: dim LEFT JOIN evaluates the aggregate once, where
+    # the semi+anti+union shape would evaluate it twice
+    out = complete_via_left_join(
+        agg, powiaty.select("JPT_KOD_JE"), "unit_id", "JPT_KOD_JE",
         fill_values={"injection_date": F.lit(inj)},
     ).orderBy("unit_id")
 
-    append_with_schema_evolution(spark, merged, agg_path, key_cols=("unit_id", "injection_date"))
-    return merged
+    append_with_schema_evolution(spark, out, agg_path, key_cols=("unit_id", "injection_date"))
+    return out

@@ -19,7 +19,10 @@ Two implementations behind one output contract:
     aggregates full-outer-joined then zero-filled (helpers:351-362,535-553).
   * ``flagship_single_pass`` — the idiomatic Spark shape: ONE shuffle,
     conditional aggregation (SURVEY.md §2.4 note). At 100 TB this reads the
-    fact once and shuffles one pre-aggregated stream instead of three.
+    fact once and shuffles one pre-aggregated stream instead of three. The
+    monthly ETL (``pipeline/permissions.py::superior_aggregates``) shares
+    this shape, built from the same ``windowed_count_exprs`` and
+    ``complete_via_left_join``.
 
 A parity test pins both to identical results; ``flagship_oracle_sql``
 returns the DuckDB oracle.

@@ -69,7 +69,7 @@ def contribute(register) -> None:
         li = load_table(spark, "lineitem", sf).select(
             F.col("l_suppkey").alias("suppkey"), F.col("l_returnflag").alias("rf")
         )
-        out = A.marginal_counts(li, "suppkey", "rf", ["A", "N", "R"])
+        out = A.pivot_counts(li, "suppkey", "rf", ["A", "N", "R"])
         for v in ["A", "N", "R"]:
             out = out.withColumnRenamed(v, f"rf_{v.lower()}")
         return out.orderBy("suppkey")

@@ -73,11 +73,12 @@ def test_asof_forward_semantics(spark):
 def test_range_join_binned_covers_boundaries(spark):
     base = _ts("2024-01-01 00:00:00")
     left = spark.createDataFrame(
-        [("u", base + dt.timedelta(seconds=s)) for s in (0, 100, 1000)],
+        [("u", base + dt.timedelta(seconds=s)) for s in (0, 100, 1000, 2000)],
         "k string, lts timestamp",
     )
     right = spark.createDataFrame(
-        [("u", base + dt.timedelta(seconds=s)) for s in (-120, -121, 99, 220, 1121)],
+        [("u", base + dt.timedelta(seconds=s))
+         for s in (-120, -121, 99, 220, 1121, 1880.5, 2120.5)],
         "k string, rts timestamp",
     )
     got = sorted(
@@ -90,7 +91,9 @@ def test_range_join_binned_covers_boundaries(spark):
     )
     # 0s: matches -120 (boundary inclusive) and 99; NOT -121
     # 100s: matches 99 and 220 (120 apart); 1000s: matches 1121? no — 121 > 120
-    assert got == [(0, -120), (0, 99), (100, 99), (100, 220)]
+    # 2000s: matches 1880.5 (119.5 apart) but NOT 2120.5 — 120.5 > 120,
+    # however the timestamps' whole seconds compare
+    assert got == [(0, -120), (0, 99), (100, 99), (100, 220), (2000, 1880)]
 
 
 def test_range_join_matches_naive(spark):

@@ -92,7 +92,20 @@ def test_full_pipeline(spark, powiaty, tmp_path):
     assert spark.read.parquet(fact).count() == n1   # re-run: no double count
 
     # --- flagship aggregate ---------------------------------------------
+    spark.catalog.clearCache()
     out = superior_aggregates(spark, fact, agg, powiaty, EXEC_DATE)
+    # nothing cached is left behind in the long-lived session
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    # observed-only columns per window (kategoria I only in April, II in
+    # May, V in June): cells in pivot order, then the five marginals
+    want = ["unit_id", "injection_date"]
+    for w, kats in (("3m", (1, 2, 5)), ("2m", (2, 5)), ("1m", (5,))):
+        want += [f"{r}_kat_{k}_{w}" for r in
+                 ("budowa", "nadbudowa", "odbudowa", "rozbudowa", "wykonanie")
+                 for k in kats]
+        want += [f"{r}_{w}" for r in
+                 ("budowa", "rozbudowa", "odbudowa", "nadbudowa", "wykonanie")]
+    assert out.columns == want
     rows = out.collect()
     # output key set == dim key set, constructively (SURVEY §5 item 3)
     assert sorted(r.unit_id for r in rows) == ["0201", "0463", "1465", "2261"]
