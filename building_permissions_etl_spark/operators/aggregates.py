@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from building_permissions_etl_spark.functions.expr import sql_ident, sql_str
+
 
 def pivot_counts(
     df: DataFrame,
@@ -40,21 +42,26 @@ def pivot_counts(
 def windowed_count_exprs(
     cell_col: str,
     cell_values: list[str],
-    windows: dict[str, "F.Column"],
+    windows: dict[str, str],
     alias_fmt=lambda v, w: f"{v}_{w}",
 ) -> list:
     """Single-pass form of (3 × filter → pivot → full-outer-join): one
-    ``count(when(in_window & cell == v, 1))`` per (window, value).
+    ``count(CASE WHEN <window> AND cell = v THEN 1 END)`` per (window,
+    value).
 
     The reference aggregates three filtered copies of one frame and outer-
     joins them (helpers:351-362,535-553); passing these expressions to ONE
     ``groupBy(key).agg`` does it in one shuffle. ``windows`` maps suffix →
-    boolean Column. Composite aggregates (the ETL's cells + per-rodzaj
+    boolean predicate as SQL text (e.g. ``d >= max_d - INTERVAL 60 DAYS``).
+    Each column is one ``F.expr`` string — a couple of py4j round trips
+    instead of one per ``F.*`` node, which dominated plan construction at
+    ~180 columns. Composite aggregates (the ETL's cells + per-rodzaj
     marginals, the registry flagship's cells + return-flag marginals)
     concatenate several lists into that one groupBy."""
+    col = sql_ident(cell_col)
     return [
-        F.count(F.when(wpred & (F.col(cell_col) == v), 1))
-        .alias(alias_fmt(v, wname))
+        F.expr(f"count(CASE WHEN ({wpred}) AND {col} = {sql_str(v)} THEN 1 END)"
+               f" AS {sql_ident(alias_fmt(v, wname))}")
         for wname, wpred in windows.items()
         for v in cell_values
     ]

@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from building_permissions_etl_spark.functions.expr import sql_ident
 from building_permissions_etl_spark.functions.text import ci_contains
 
 
@@ -80,7 +81,7 @@ def complete_via_left_join(
     dim: DataFrame,
     agg_key: str,
     dim_key: str,
-    fill_values: dict[str, Column],
+    fill_values: dict[str, str],
 ) -> DataFrame:
     """J2+J3+U1 fused into ONE join: ``dim LEFT JOIN agg`` yields exactly
     the dim key set (the semi-join restriction and the zero-row completion
@@ -91,15 +92,19 @@ def complete_via_left_join(
     ``agg`` twice (once directly, once under the anti-join), and Spark
     duplicates the whole upstream plan unless it is cached. At 100 TB that
     is a second full scan+shuffle; this shape is the one to run.
+
+    ``fill_values`` maps a column to its filler as a SQL literal (e.g.
+    ``sql_str(date)``); every other column is filled with 0. The schema is
+    read once and the coalesce/cast list is ONE ``selectExpr``: a wide
+    aggregate costs one py4j round trip per column (the list transfer),
+    not a ``dtypes`` re-read and several ``F.*`` calls per column.
     """
     out = dim.select(F.col(dim_key).alias(agg_key)).join(agg, on=agg_key, how="left")
-    cols = [F.col(agg_key)]
-    for c in agg.columns:
-        if c == agg_key:
-            continue
-        filler = fill_values.get(c, F.lit(0))
-        cols.append(F.coalesce(F.col(c), filler).cast(dict(agg.dtypes)[c]).alias(c))
-    return out.select(*cols)
+    return out.selectExpr(sql_ident(agg_key), *[
+        f"CAST(coalesce({sql_ident(c)}, {fill_values.get(c, '0')}) AS {t})"
+        f" AS {sql_ident(c)}"
+        for c, t in agg.dtypes if c != agg_key
+    ])
 
 
 def fuzzy_first_match(

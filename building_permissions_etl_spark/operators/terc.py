@@ -123,17 +123,27 @@ def correct_terc(
     )
 
 
-def correction_audit_metrics(df: DataFrame) -> DataFrame:
-    """A7 (helpers:207-219): one-pass audit counts over the corrected
-    frame — total rows, per-sentinel-class counts, % invalid."""
+def correction_audit_exprs() -> list[Column]:
+    """A7 (helpers:207-219): the audit counts over the corrected frame —
+    total rows, per-sentinel-class counts, % invalid. Aggregates only, so
+    they serve both ``agg`` and ``DataFrame.observe`` (the ingest collects
+    them during its fact write instead of running a separate action).
+    % invalid of zero rows is NULL (``try_divide``): under ANSI a plain
+    division raises there, and an observed metric that fails to evaluate
+    never reaches its ``Observation``, whose ``get`` then waits forever."""
     total = F.count(F.lit(1))
     cls = {u: F.count(F.when(F.col("untypical") == u, 1)) for u in UNKNOWN_CLASSES}
     invalid = sum(cls.values(), F.lit(0))
-    return df.agg(
+    return [
         total.alias("total_rows"),
         *[c.alias(f"rows_{u.lower()}") for u, c in cls.items()],
-        F.round(invalid * 100.0 / total, 4).alias("pct_invalid"),
-    )
+        F.round(F.try_divide(invalid * 100.0, total), 4).alias("pct_invalid"),
+    ]
+
+
+def correction_audit_metrics(df: DataFrame) -> DataFrame:
+    """A7 as a one-row frame: ``correction_audit_exprs`` in one agg pass."""
+    return df.agg(*correction_audit_exprs())
 
 
 def drop_invalid_terc(df: DataFrame) -> DataFrame:

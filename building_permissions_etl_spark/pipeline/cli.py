@@ -12,7 +12,10 @@ and the scheduler stays external (cron/Airflow/Dagster calling
     viz       — nb:21/nb:25 reporting: lookback choropleth, monthly
                 animation, category bar chart → SVG files (no plotting
                 libraries needed; see operators/choropleth.py)
-    all       — validate → ingest → aggregate in sequence
+    all       — ingest → aggregate in sequence, reading the county dim
+                once; the result carries the ingest audit and the
+                aggregate row count (no validation: run ``validate``
+                separately)
 
 Logical time comes ONLY from ``--date`` (the reference threads Airflow's
 execution_date the same way; wall-clock never drives data logic).
@@ -99,13 +102,20 @@ def run(spark: SparkSession, argv: list[str]) -> dict:
         rep = suite.render_html(df, ns.report)
         return {"task": "validate", "report": ns.report, **rep}
 
-    if ns.task in ("ingest", "all"):
-        from building_permissions_etl_spark.pipeline.permissions import ingest_permissions
+    if ns.task in ("ingest", "aggregate", "all"):
+        from building_permissions_etl_spark.pipeline import permissions
 
         powiaty = spark.read.parquet(ns.powiaty)
-        audit = ingest_permissions(spark, ns.csv, ns.fact, powiaty, exec_date)
-        if ns.task == "ingest":
-            return {"task": "ingest", **audit}
+        result = {"task": ns.task}
+        if ns.task != "aggregate":
+            result.update(permissions.ingest_permissions(
+                spark, ns.csv, ns.fact, powiaty, exec_date))
+        if ns.task != "ingest":
+            permissions.superior_aggregates(spark, ns.fact, ns.agg, powiaty, exec_date)
+            # the dim LEFT JOIN completion emits exactly one row per dim
+            # row; counting the returned frame would run the aggregate again
+            result["aggregate_rows"] = powiaty.count()
+        return result
 
     if ns.task == "viz":
         import os
@@ -192,15 +202,6 @@ def run(spark: SparkSession, argv: list[str]) -> dict:
             outputs[name] = path
         return {"task": "viz", "outputs": outputs,
                 "months": len(frames), "voivodeships": len(dim_wkt)}
-
-    if ns.task in ("aggregate", "all"):
-        from building_permissions_etl_spark.pipeline.permissions import superior_aggregates
-
-        powiaty = spark.read.parquet(ns.powiaty)
-        superior_aggregates(spark, ns.fact, ns.agg, powiaty, exec_date)
-        # the dim LEFT JOIN completion emits exactly one row per dim row;
-        # counting the returned frame would run the whole aggregate again
-        return {"task": ns.task, "aggregate_rows": powiaty.count()}
 
     raise SystemExit(f"unhandled task {ns.task}")
 

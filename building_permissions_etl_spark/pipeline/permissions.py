@@ -3,12 +3,12 @@ re-architecture of the reference DAG's ingest + aggregate tasks
 (dags/aggregates_python.py:49-85), parameterized by logical date (never
 wall-clock, helpers:101-102).
 
-Ingest (one lazy, shuffle-free plan until the write — the fuzzy join is
-broadcast):
+Ingest (one CSV scan, one write job — the fuzzy join is broadcast):
     read CSV (S2) → parse event time w/ coerce-to-null (C5) → mode-
-    dependent range filter (F1/F2) → terc correction (§2.10) → audit
-    (A7) → drop Unknown* (F4) → drop null event time (F3) → partitioned
-    clustered write (S4).
+    dependent range filter (F1/F2) → [cached] → terc correction (§2.10),
+    its distinct-city lookup built from the cached rows → audit (A7)
+    observed on the write → drop Unknown* (F4) → drop null event time
+    (F3) → partitioned clustered write (S4).
 
 Aggregate (the flagship, §3.3): 3-month scan with pushed-down predicate
 (S7) → county prefix (C1) → one small aggregate finding each window's
@@ -16,24 +16,28 @@ observed (rodzaj, kategoria) cells → ONE groupBy of conditional counts
 for all three windows: pivot cells (A1) + per-type marginals (A2), named
 deromanized/sanitized (C4/C21) — the same single-pass shape as
 ``plans/flagship.py::flagship_single_pass`` → injection date/reorder/
-rename (C19/F9/F10) → dim completion as one left join (J2+J3+U1) → sort
-(O1) → schema-evolving append (S13).
+rename (C19/F9/F10) → dim completion as one left join (J2+J3+U1) →
+single-file sorted write (O1) → schema-evolving append (S13). The wide
+projections are SQL text, so building the ~180-column plan costs a few
+py4j round trips per column, not one per ``F.*`` node.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from building_permissions_etl_spark.functions.expr import sql_ident, sql_str
 from building_permissions_etl_spark.functions.roman import INT_OF_ROMAN
 from building_permissions_etl_spark.functions.text import sanitize_column_names
 from building_permissions_etl_spark.operators.aggregates import windowed_count_exprs
 from building_permissions_etl_spark.operators.joins import complete_via_left_join
 from building_permissions_etl_spark.operators.terc import (
     correct_terc,
-    correction_audit_metrics,
+    correction_audit_exprs,
+    correction_audit_metrics,  # noqa: F401  (bound here for perfbench's terc span)
     drop_invalid_terc,
 )
 from building_permissions_etl_spark.schemas import (
@@ -45,6 +49,7 @@ from building_permissions_etl_spark.sources.csv_source import (
     read_permissions_csv,
 )
 from building_permissions_etl_spark.sources.sinks import (
+    MONTH_COL,
     append_with_schema_evolution,
     table_exists_nonempty,
     write_fact_partitioned,
@@ -69,7 +74,8 @@ def ingest_permissions(
     Mode (helpers:89-111): 'update' (sink non-empty) loads only rows in
     (first_day_of_prev_month, execution_date) — both bounds STRICT
     (helpers:186-191); 'full' loads everything < execution_date.
-    Returns audit metrics (driver-side dict, logged by the scheduler).
+    Returns the A7 audit metrics (driver-side dict, logged by the
+    scheduler), observed on the fact write.
     """
     mode = "update" if table_exists_nonempty(spark, fact_path) else "full"
     df = parse_event_time(read_permissions_csv(spark, csv_path))
@@ -81,13 +87,13 @@ def ingest_permissions(
     else:
         df = df.filter(t < F.lit(execution_date))
 
-    # the audit action and the write both consume the corrected frame,
-    # and correct_terc internally scans the CSV again for its distinct-
-    # city broadcast lookup — uncached, one ingest run would execute ~4
-    # full CSV scans. One cached generation serves both actions.
-    corrected = correct_terc(df, powiaty).cache()
+    # one CSV scan: the terc lookup's distinct cities and the write both
+    # read these cached rows, and the audit is observed on the write
+    # instead of being a separate action
+    rows = df.cache()
     try:
-        audit = correction_audit_metrics(corrected).first().asDict()
+        audit = Observation()
+        corrected = correct_terc(rows, powiaty).observe(audit, *correction_audit_exprs())
         clean = drop_invalid_terc(corrected).na.drop(subset=[EVENT_TIME_COL])
 
         write_fact_partitioned(
@@ -95,8 +101,8 @@ def ingest_permissions(
             overwrite_partitions=(mode == "update"),
         )
     finally:
-        corrected.unpersist()
-    return {"mode": mode, **audit}
+        rows.unpersist()
+    return {"mode": mode, **audit.get}
 
 
 # --- aggregate task -----------------------------------------------------
@@ -125,9 +131,6 @@ def superior_aggregates(
     execution_date: dt.datetime,
 ) -> DataFrame:
     """Task 4 (helpers:323-426): the flagship monthly aggregate."""
-    from building_permissions_etl_spark.sources.sinks import MONTH_COL
-
-    t = F.col(EVENT_TIME_COL)
     fact = spark.read.parquet(fact_path)
     # S7: the 3-month window is bounded on BOTH sides and duplicated on
     # the month PARTITION column. The upper bound makes backfills
@@ -140,25 +143,25 @@ def superior_aggregates(
     # directory (yyyy-MM strings compare chronologically).
     # INTERVAL arithmetic preserves the logical date's time-of-day
     # (add_months coerces to DATE and would snap a midday logical date
-    # to midnight, mirroring nothing in the reference's relativedelta)
-    end = F.lit(execution_date).cast("timestamp")
-    lo = end - F.expr("INTERVAL 3 MONTHS")
+    # to midnight, mirroring nothing in the reference's relativedelta).
+    # Every bound is SQL text over ONE timestamp literal, read in the
+    # session time zone like the fact's event times and month column, so
+    # the pruning filter, the observed-cell flags and the counts cannot
+    # disagree on where a window starts.
+    t, month = sql_ident(EVENT_TIME_COL), sql_ident(MONTH_COL)
+    end = f"TIMESTAMP {sql_str(execution_date.isoformat(' '))}"
+    bounds = {f"{n}m": f"{end} - INTERVAL {n} MONTHS" for n in (3, 2, 1)}
+    windows = {s: f"{t} >= {lo}" for s, lo in bounds.items()}
     base = fact.filter(
-        (t >= lo) & (t < F.lit(execution_date))
-        & (F.col(MONTH_COL) >= F.date_format(lo, "yyyy-MM"))
-        & (F.col(MONTH_COL)
-           <= F.date_format(F.lit(execution_date), "yyyy-MM"))
+        f"{windows['3m']} AND {t} < {end}"
+        f" AND {month} >= date_format({bounds['3m']}, 'yyyy-MM')"
+        f" AND {month} <= date_format({end}, 'yyyy-MM')"
     ).select(
         F.substring("terc", 1, 4).alias("unit_id"),
         "rodzaj_zam_budowlanego",
         F.concat_ws("|", "rodzaj_zam_budowlanego", "kategoria").alias("cell"),
         EVENT_TIME_COL,
     )
-    windows = {
-        "3m": F.lit(True),
-        "2m": t >= end - F.expr("INTERVAL 2 MONTHS"),
-        "1m": t >= end - F.expr("INTERVAL 1 MONTH"),
-    }
 
     # Observed cells only — reference parity: pandas pivot_table mints
     # columns per observed (rodzaj, kategoria) pair (helpers:431), which
@@ -167,7 +170,7 @@ def superior_aggregates(
     # (≤ 5×30 rows, SURVEY.md §7 risk 4). Cells keep pivot()'s ascending
     # order, then come the five marginals.
     seen = base.groupBy("cell").agg(
-        *[F.max(pred).alias(s) for s, pred in windows.items()]
+        *[F.expr(f"max({pred}) AS {sql_ident(s)}") for s, pred in windows.items()]
     ).collect()
     counts = []
     for suffix, pred in windows.items():
@@ -179,15 +182,16 @@ def superior_aggregates(
             alias_fmt=lambda r, s: sanitize_column_names([f"{_short_rodzaj(r)}_{s}"])[0])
 
     inj = execution_date.strftime("%Y-%m-%d %H:%M:%S.%f")[:-3] + " UTC"
-    agg = base.groupBy("unit_id").agg(*counts)
-    agg = agg.select("unit_id", F.lit(inj).alias("injection_date"), *agg.columns[1:])
+    agg = base.groupBy("unit_id").agg(F.lit(inj).alias("injection_date"), *counts)
 
     # fused J2+J3+U1: dim LEFT JOIN evaluates the aggregate once, where
-    # the semi+anti+union shape would evaluate it twice
+    # the semi+anti+union shape would evaluate it twice. The result has
+    # at most |dim| rows, so one sorted partition replaces a global
+    # orderBy and its range-sampling job (and writes one file).
     out = complete_via_left_join(
         agg, powiaty.select("JPT_KOD_JE"), "unit_id", "JPT_KOD_JE",
-        fill_values={"injection_date": F.lit(inj)},
-    ).orderBy("unit_id")
+        fill_values={"injection_date": sql_str(inj)},
+    ).coalesce(1).sortWithinPartitions("unit_id")
 
     append_with_schema_evolution(spark, out, agg_path, key_cols=("unit_id", "injection_date"))
     return out

@@ -22,7 +22,10 @@ Two implementations behind one output contract:
     fact once and shuffles one pre-aggregated stream instead of three. The
     monthly ETL (``pipeline/permissions.py::superior_aggregates``) shares
     this shape, built from the same ``windowed_count_exprs`` and
-    ``complete_via_left_join``.
+    ``complete_via_left_join``. Both emit their wide projections as SQL
+    text (one ``F.expr`` per count, one ``selectExpr`` for the
+    completion), so construction costs a few py4j round trips per column
+    instead of one per ``F.*`` node.
 
 A parity test pins both to identical results; ``flagship_oracle_sql``
 returns the DuckDB oracle.
@@ -34,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from building_permissions_etl_spark.catalog import load_table
+from building_permissions_etl_spark.functions.expr import sql_str
 from building_permissions_etl_spark.operators.aggregates import (
     pivot_counts,
     windowed_count_exprs,
@@ -106,7 +110,7 @@ def _finalize(agg: DataFrame, spark: SparkSession, sf_dir: str,
         agg = agg.withColumn("injection_date", F.lit(injection_date))
         agg = complete_via_left_join(
             agg, nation, "unit_id", "n_key",
-            fill_values={"injection_date": F.lit(injection_date)},
+            fill_values={"injection_date": sql_str(injection_date)},
         )
     else:
         agg = keep_known_keys(agg, nation, "unit_id", "n_key")
@@ -153,10 +157,7 @@ def flagship_single_pass(spark: SparkSession, sf_dir: str,
                          injection_date: str = DEFAULT_INJECTION_DATE) -> DataFrame:
     """Idiomatic shape: one shuffle, conditional aggregation."""
     base = _base(spark, sf_dir)
-    windows = {
-        wname: F.col("d") >= F.col("max_d") - F.expr(f"INTERVAL {days} DAYS")
-        for wname, days in WINDOWS
-    }
+    windows = {wname: f"d >= max_d - INTERVAL {days} DAYS" for wname, days in WINDOWS}
     # per window: cell counts then return-flag marginals, both built by
     # the shared conditional-count expression builder (one groupBy total)
     aggs = []

@@ -21,9 +21,10 @@ The reference's BigQuery sink semantics, on parquet:
 
 from __future__ import annotations
 
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from building_permissions_etl_spark.functions.expr import sql_ident
 
 MONTH_COL = "month"
 
@@ -54,16 +55,33 @@ def write_fact_partitioned(
 def table_exists_nonempty(spark: SparkSession, path: str) -> bool:
     """S6 (helpers:89-96): EXISTS(SELECT 1 ... LIMIT 1) analog.
 
-    The probe is the read itself — a driver-local ``os.path.exists``
-    would be False for EVERY distributed path (s3a://, hdfs://), making
-    the caller treat populated remote tables as missing: ingest would
-    re-load full history every run and schema evolution would
-    destructively overwrite the sink. ``spark.read.parquet`` raising
-    PATH_NOT_FOUND is the storage-agnostic "missing" signal."""
-    try:
-        return not spark.read.parquet(path).limit(1).isEmpty()
-    except Exception:
+    Existence is asked of the path's own Hadoop ``FileSystem`` — a
+    driver-local ``os.path.exists`` would be False for EVERY distributed
+    path (s3a://, hdfs://), making the caller treat populated remote
+    tables as missing: ingest would re-load full history every run and
+    schema evolution would destructively overwrite the sink. Only an
+    absent path, a directory without data files (entries named ``_*`` or
+    ``.*`` are metadata or uncommitted output, as Spark's file index
+    treats them) or a table of zero rows is "empty"; any other failure —
+    a corrupt file, a transient read error — raises, because answering
+    False would turn it into a full reload or an overwrite."""
+    sc = spark.sparkContext
+    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
+    if not fs.exists(p) or not _has_data_file(fs, p):
         return False
+    return not spark.read.parquet(path).limit(1).isEmpty()
+
+
+def _has_data_file(fs, p) -> bool:
+    """Depth-first: stops at the first visible file under ``p`` (a file
+    path lists as itself)."""
+    for st in fs.listStatus(p):
+        if st.getPath().getName().startswith(("_", ".")):
+            continue
+        if not st.isDirectory() or _has_data_file(fs, st.getPath()):
+            return True
+    return False
 
 
 def append_with_schema_evolution(
@@ -87,29 +105,34 @@ def append_with_schema_evolution(
     ``key_cols`` are the columns that may NEVER be reconciled by
     zero-fill: a key absent from either side is schema corruption, not
     evolution, and raises instead of silently materializing '0' keys.
+    Each side's schema is read once and reconciled with one projection:
+    sink columns in sink order, then the new columns in ``df`` order.
     """
     if not table_exists_nonempty(spark, path):
         df.write.mode("overwrite").parquet(path)
         return
 
     existing = spark.read.parquet(path)
+    df_types, sink_types = dict(df.dtypes), dict(existing.dtypes)
     missing_keys = [k for k in key_cols
-                    if k not in df.columns or k not in existing.columns]
+                    if k not in df_types or k not in sink_types]
     if missing_keys:
         raise ValueError(
             f"key column(s) {missing_keys} absent from "
-            f"{'input' if missing_keys[0] not in df.columns else 'sink'} — "
+            f"{'input' if missing_keys[0] not in df_types else 'sink'} — "
             f"refusing to zero-fill identity columns"
         )
-    df_missing = [c for c in existing.columns if c not in df.columns]
-    for c in df_missing:
-        df = df.withColumn(c, F.lit(0).cast(dict(existing.dtypes)[c]))
-    sink_missing = [c for c in df.columns if c not in existing.columns]
+    sink_missing = [c for c in df_types if c not in sink_types]
+    types = {**sink_types, **df_types}
+
+    def reconcile(side: DataFrame, have: dict[str, str]) -> DataFrame:
+        return side.selectExpr(*[
+            sql_ident(c) if c in have else f"CAST(0 AS {types[c]}) AS {sql_ident(c)}"
+            for c in [*sink_types, *sink_missing]
+        ])
 
     if sink_missing:
-        for c in sink_missing:
-            existing = existing.withColumn(c, F.lit(0).cast(dict(df.dtypes)[c]))
-        merged = existing.unionByName(df.select(existing.columns))
+        merged = reconcile(existing, sink_types).unionByName(reconcile(df, df_types))
         # rewrite via a temp path: parquet can't append new columns in place
         tmp = path.rstrip("/") + ".__evolving__"
         merged.write.mode("overwrite").parquet(tmp)
@@ -117,7 +140,7 @@ def append_with_schema_evolution(
         final.write.mode("overwrite").parquet(path)
         _rm(tmp)
     else:
-        df.select(existing.columns).write.mode("append").parquet(path)
+        reconcile(df, df_types).write.mode("append").parquet(path)
 
 
 def _rm(path: str) -> None:

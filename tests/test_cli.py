@@ -51,6 +51,9 @@ def test_cli_validate_ingest_aggregate(spark, tmp_path):
     everything = run(spark, ["all", "--date", "2022-07-01", "--csv", csv,
                              "--fact", fact, "--agg", agg, "--powiaty", powiaty])
     assert everything["task"] == "all" and everything["aggregate_rows"] == 4
+    # ... and reports the ingest it ran: the same audit keys as `ingest`
+    assert everything["mode"] == "update" and everything["total_rows"] > 0
+    assert set(everything) == set(i) | {"aggregate_rows"}
 
 
 def test_notify_file_outbox(tmp_path):

@@ -10,6 +10,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from building_permissions_etl_spark.operators.terc import (
+    correct_terc,
+    correction_audit_metrics,
+)
 from building_permissions_etl_spark.pipeline.permissions import (
     first_day_of_previous_month,
     ingest_permissions,
@@ -19,6 +23,10 @@ from building_permissions_etl_spark.schemas import (
     EVENT_TIME_COL,
     EXPECTED_RODZAJ_TYPES,
     PERMISSIONS_CSV_COLUMNS,
+)
+from building_permissions_etl_spark.sources.csv_source import (
+    parse_event_time,
+    read_permissions_csv,
 )
 
 EXEC_DATE = dt.datetime(2022, 7, 1)
@@ -73,10 +81,23 @@ def test_full_pipeline(spark, powiaty, tmp_path):
     agg = str(tmp_path / "agg")
     _write_csv(csv, _csv_rows())
 
+    # --- a window with no rows: a zero-row audit, and the table stays
+    # "empty" for the probe, so the next ingest is still a full load -----
+    nothing = ingest_permissions(spark, csv, fact, powiaty, dt.datetime(2021, 12, 1))
+    assert nothing["total_rows"] == 0 and nothing["pct_invalid"] is None
+
     # --- full-mode ingest ------------------------------------------------
+    spark.catalog.clearCache()
     audit = ingest_permissions(spark, csv, fact, powiaty, EXEC_DATE)
+    # the cached CSV rows are released once the fact write is done
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     assert audit["mode"] == "full"
     assert audit["total_rows"] > 0
+    # the audit observed on the write equals the standalone A7 aggregate
+    rows = parse_event_time(read_permissions_csv(spark, csv)).filter(
+        F.col(EVENT_TIME_COL) < F.lit(EXEC_DATE))
+    expected = correction_audit_metrics(correct_terc(rows, powiaty)).first().asDict()
+    assert audit == {"mode": "full", **expected}
     loaded = spark.read.parquet(fact)
     assert "month" in loaded.columns
     assert loaded.filter(F.col(EVENT_TIME_COL) >= F.lit(EXEC_DATE)).count() == 0
@@ -187,6 +208,60 @@ def test_superior_aggregates_excludes_future_months(spark, tmp_path):
     # only the April row counts; the July row (after the logical date)
     # must be invisible to this run
     assert max(counts) == 1, row
+
+
+def test_aggregate_quotes_cell_text(spark, tmp_path):
+    """Cell values reach the aggregate as SQL text: quotes, backslashes,
+    backticks and Polish letters must neither break the plan nor change
+    the column name or the counts."""
+    from building_permissions_etl_spark.sources.sinks import (
+        write_fact_partitioned,
+    )
+
+    rodzaj, kat = "Rozbiórka `x' \\ żółć/ł", "Ź'\\`"
+    rows = [
+        ("1465", rodzaj, kat, dt.datetime(2022, 4, 20)),  # in every window
+        ("0201", rodzaj, kat, dt.datetime(2022, 1, 15)),  # before the 3m window
+    ]
+    fact = spark.createDataFrame(
+        rows, "terc string, rodzaj_zam_budowlanego string, kategoria string,"
+              " data_wplywu_wniosku_do_urzedu timestamp")
+    fact_path = str(tmp_path / "fact")
+    write_fact_partitioned(fact, fact_path,
+                           "data_wplywu_wniosku_do_urzedu", "terc")
+    powiaty = spark.createDataFrame([("1465", "Warszawa"), ("0201", "Wroclaw")],
+                                    ["JPT_KOD_JE", "JPT_NAZWA_"])
+    out = superior_aggregates(spark, fact_path, str(tmp_path / "agg"),
+                              powiaty, dt.datetime(2022, 5, 1))
+    name = "Rozbiórka_`x'_\\_żółć_ł|Ź'\\`_3m"
+    assert name in out.columns
+    counts = {r.unit_id: r[name] for r in out.collect()}
+    assert counts == {"1465": 1, "0201": 0}
+    # the sink reads back the same column name
+    assert name in spark.read.parquet(str(tmp_path / "agg")).columns
+
+
+def test_probe_raises_on_unreadable_sink(spark, tmp_path):
+    """A table that exists but cannot be read is not "missing": the
+    schema-evolving append must raise and leave the sink untouched
+    instead of overwriting it."""
+    from py4j.protocol import Py4JJavaError
+
+    from building_permissions_etl_spark.sources.sinks import (
+        append_with_schema_evolution,
+    )
+
+    path = tmp_path / "sink"
+    path.mkdir()
+    corrupt = path / "part-00000-corrupt.snappy.parquet"
+    corrupt.write_bytes(b"not a parquet file")
+    df = spark.createDataFrame([("a", "2022", 1)],
+                               "unit_id string, injection_date string, n int")
+    with pytest.raises(Py4JJavaError, match="CANNOT_READ_FILE_FOOTER"):
+        append_with_schema_evolution(spark, df, str(path),
+                                     key_cols=("unit_id", "injection_date"))
+    assert corrupt.read_bytes() == b"not a parquet file"
+    assert sorted(p.name for p in path.iterdir()) == [corrupt.name]
 
 
 def test_schema_evolution_refuses_to_zero_fill_keys(spark, tmp_path):
