@@ -1,4 +1,5 @@
-"""String/normalization helpers (SURVEY.md §2.8 C1-C3, C12-C15, C21).
+"""String/normalization helpers (SURVEY.md §2.8 C1-C3, C12-C14, C21; the
+C15 null/'nan' test is SQL text in ``operators/terc.py``).
 
 Every row-level transform is a native Column expression so it stays inside
 whole-stage codegen; column-*name* transforms are plain Python (driver-side
@@ -27,12 +28,6 @@ def canonicalize_numeric_string(col: Column) -> Column:
 def zero_pad_terc(col: Column) -> Column:
     """C2: 6-digit numeric terc → prepend '0' (helpers:288-289)."""
     return F.when(col.rlike(r"^\d{6}$"), F.concat(F.lit("0"), col)).otherwise(col)
-
-
-def is_nullish(col: Column) -> Column:
-    """C15: null OR the literal string 'nan' (pandas str-cast artifact,
-    helpers:265-267). Preserved deliberately for parity."""
-    return col.isNull() | (col == "nan") | (col == "")
 
 
 def voivodeship_name(prefix2: Column, default: str = "Unknown") -> Column:

@@ -1,8 +1,9 @@
 """The terc-correction row transform (SURVEY.md §2.10) — the one "real
 UDF" of the reference (``assign_terc_and_validate`` applied row-wise via
-``df.apply(axis=1)``, helpers:202,240-300) — re-expressed as pure Column
-logic: nested when/otherwise plus ONE broadcast fuzzy lookup. No Python
-in the row path; the whole tree runs inside whole-stage codegen.
+``df.apply(axis=1)``, helpers:202,240-300) — re-expressed as pure SQL:
+nested ``CASE`` expressions, one projection per stage, plus ONE broadcast
+fuzzy lookup. No Python in the row path; the whole tree runs inside
+whole-stage codegen.
 
 Decision tree (helpers:240-300), preserved branch-for-branch:
 
@@ -31,11 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from building_permissions_etl_spark.functions.text import (
-    canonicalize_numeric_string,
-    ci_contains,
-    is_nullish,
-)
+from building_permissions_etl_spark.functions.expr import sql_ident, sql_str
+from building_permissions_etl_spark.functions.text import ci_contains
 from building_permissions_etl_spark.schemas import VOIVODESHIPS
 
 UNKNOWN_CLASSES = ("Unknown", "Unknown2", "Unknown3")
@@ -60,6 +58,10 @@ def _fuzzy_city_lookup(df: DataFrame, powiaty: DataFrame,
     )
 
 
+def _rlike(sql: str, pattern: str) -> str:
+    return f"{sql} RLIKE {sql_str(pattern)}"
+
+
 def correct_terc(
     df: DataFrame,
     powiaty: DataFrame,
@@ -67,59 +69,53 @@ def correct_terc(
     jn_col: str = "jednostki_numer",
     miasto_col: str = "miasto",
 ) -> DataFrame:
-    """Apply the full §2.10 tree; replaces ``terc`` and adds ``untypical``."""
-    lookup = _fuzzy_city_lookup(df, powiaty, miasto_col)
-    df = df.join(
-        F.broadcast(lookup), df[miasto_col] == lookup["__miasto"], "left"
-    ).drop("__miasto")
+    """Apply the full §2.10 tree; replaces ``terc`` and adds ``untypical``.
 
+    Each stage is one SQL-text projection, so the plan is analysed twice
+    instead of once per derived column."""
+    cols = df.columns
+    lookup = _fuzzy_city_lookup(df, powiaty, miasto_col)
+    df = df.join(F.broadcast(lookup), df[miasto_col] == lookup["__miasto"], "left")
+
+    t, jn = sql_ident(terc_col), sql_ident(jn_col)
     # canonicalize the pandas float-read artifact first (helpers:37,200)
-    c = canonicalize_numeric_string(F.col(terc_col))
-    jn = F.col(jn_col)
-    nullish = is_nullish(c)
+    numericish, float_tail = _rlike(t, r"^\d+(\.0)?$"), sql_str(r"\.0$")
+    c = f"CASE WHEN {numericish} THEN regexp_replace({t}, {float_tail}, '') ELSE {t} END"
+    # C15 (helpers:265-267): null, '' or the pandas 'nan' artifact; the
+    # canonicalization only rewrites digit strings, so the raw code is
+    # nullish exactly when the canonical one is
+    nullish = f"({t} IS NULL OR {t} IN ('nan', ''))"
     # jn usability is notnull & != 'nan' ONLY (helpers:266) — an empty
     # string jn is used (→ ''[:4] = '' → stage 2 'Unknown3'), faithfully.
-    jn_ok = jn.isNotNull() & (jn != "nan")
-    fuzzy = F.col("__fuzzy_terc")
+    jn_ok = f"({jn} IS NOT NULL AND {jn} != 'nan')"
 
     # stage 1: assignment
-    terc1 = (
-        F.when(nullish & jn_ok, F.substring(jn, 1, 4))
-        .when(nullish & ~jn_ok & fuzzy.isNotNull(), fuzzy)
-        .when(nullish, F.lit("Unknown"))
-        .otherwise(c)
+    df = df.selectExpr(
+        *map(sql_ident, cols),
+        f"CASE WHEN {nullish} THEN CASE WHEN {jn_ok} THEN substring({jn}, 1, 4)"
+        " WHEN __fuzzy_terc IS NOT NULL THEN __fuzzy_terc ELSE 'Unknown' END"
+        f" ELSE {c} END AS __terc1",
+        f"CASE WHEN {nullish} THEN CASE WHEN {jn_ok} OR __fuzzy_terc IS NOT NULL"
+        " THEN 'Matched' ELSE 'Unknown' END END AS __unt1",
     )
-    unt1 = (
-        F.when(nullish & jn_ok, F.lit("Matched"))
-        .when(nullish & ~jn_ok & fuzzy.isNotNull(), F.lit("Matched"))
-        .when(nullish, F.lit("Unknown"))
-        .otherwise(F.lit(None).cast("string"))
-    )
-
-    df = df.withColumn("__terc1", terc1).withColumn("__unt1", unt1)
-    t1, u1 = F.col("__terc1"), F.col("__unt1")
 
     # stage 2: validation (order of the reference's if/elif chain matters)
-    prefix_ok = F.substring(t1, 1, 2).isin(list(VOIVODESHIPS))
-    padded = F.concat(F.lit("0"), t1)
-    padded_prefix_ok = F.substring(padded, 1, 2).isin(list(VOIVODESHIPS))
-    is7 = t1.rlike(r"^\d{7}$")
-    is6 = t1.rlike(r"^\d{6}$")
-    is4 = t1.rlike(r"^\d{4}$")
-
-    terc2 = F.when(is6, padded).otherwise(t1)
-    unt2 = (
-        F.when(is7, F.when(~prefix_ok, F.lit("Unknown2")).otherwise(u1))
-        .when(is6, F.when(~padded_prefix_ok, F.lit("Unknown2")).otherwise(u1))
-        .when(is4 & (u1 == "Matched"), u1)
-        .when(u1 == "Unknown", u1)
-        .otherwise(F.lit("Unknown3"))
+    codes = ", ".join(map(sql_str, VOIVODESHIPS))
+    padded = "concat('0', __terc1)"
+    is7, is6, is4 = (_rlike("__terc1", rf"^\d{{{n}}}$") for n in (7, 6, 4))
+    unknown_prefix = (f"CASE WHEN substring({{}}, 1, 2) NOT IN ({codes})"
+                      " THEN 'Unknown2' ELSE __unt1 END")
+    untypical = (
+        f"CASE WHEN {is7} THEN {unknown_prefix.format('__terc1')}"
+        f" WHEN {is6} THEN {unknown_prefix.format(padded)}"
+        f" WHEN {is4} AND __unt1 = 'Matched' THEN __unt1"
+        " WHEN __unt1 = 'Unknown' THEN __unt1"
+        " ELSE 'Unknown3' END AS untypical"
     )
-
-    return (
-        df.withColumn(terc_col, terc2)
-        .withColumn("untypical", unt2)
-        .drop("__terc1", "__unt1", "__fuzzy_terc")
+    return df.selectExpr(
+        *[f"CASE WHEN {is6} THEN {padded} ELSE __terc1 END AS {t}" if col == terc_col
+          else sql_ident(col) for col in cols],
+        untypical,
     )
 
 

@@ -13,9 +13,10 @@ and the scheduler stays external (cron/Airflow/Dagster calling
                 animation, category bar chart → SVG files (no plotting
                 libraries needed; see operators/choropleth.py)
     all       — ingest → aggregate in sequence, reading the county dim
-                once; the result carries the ingest audit and the
-                aggregate row count (no validation: run ``validate``
-                separately)
+                once (its schema from a parquet footer, no job); the
+                result carries the ingest audit and the aggregate rows
+                observed on the sink's write (no validation: run
+                ``validate`` separately)
 
 Logical time comes ONLY from ``--date`` (the reference threads Airflow's
 execution_date the same way; wall-clock never drives data logic).
@@ -104,17 +105,18 @@ def run(spark: SparkSession, argv: list[str]) -> dict:
 
     if ns.task in ("ingest", "aggregate", "all"):
         from building_permissions_etl_spark.pipeline import permissions
+        from building_permissions_etl_spark.sources.sinks import read_parquet_table
 
-        powiaty = spark.read.parquet(ns.powiaty)
+        powiaty = read_parquet_table(spark, ns.powiaty)
         result = {"task": ns.task}
         if ns.task != "aggregate":
             result.update(permissions.ingest_permissions(
                 spark, ns.csv, ns.fact, powiaty, exec_date))
         if ns.task != "ingest":
-            permissions.superior_aggregates(spark, ns.fact, ns.agg, powiaty, exec_date)
-            # the dim LEFT JOIN completion emits exactly one row per dim
-            # row; counting the returned frame would run the aggregate again
-            result["aggregate_rows"] = powiaty.count()
+            out = permissions.superior_aggregates(spark, ns.fact, ns.agg, powiaty, exec_date)
+            # the rows the sink wrote, observed during its write: counting
+            # the returned frame (or the dim) would be another job
+            result["aggregate_rows"] = out.written.get["rows"]
         return result
 
     if ns.task == "viz":

@@ -17,9 +17,14 @@ for all three windows: pivot cells (A1) + per-type marginals (A2), named
 deromanized/sanitized (C4/C21) — the same single-pass shape as
 ``plans/flagship.py::flagship_single_pass`` → injection date/reorder/
 rename (C19/F9/F10) → dim completion as one left join (J2+J3+U1) →
-single-file sorted write (O1) → schema-evolving append (S13). The wide
-projections are SQL text, so building the ~180-column plan costs a few
-py4j round trips per column, not one per ``F.*`` node.
+single-file sorted write (O1), its rows observed → schema-evolving
+append (S13), a growing schema committed by renaming a staging copy in.
+The wide projections are SQL text, so building the ~180-column plan
+costs a few py4j round trips per column, not one per ``F.*`` node.
+
+No step runs a job only to read metadata: the sink probes and the
+fact's and sink's schemas come from parquet footers read on the driver
+(``sources/sinks.py``).
 """
 
 from __future__ import annotations
@@ -51,6 +56,7 @@ from building_permissions_etl_spark.sources.csv_source import (
 from building_permissions_etl_spark.sources.sinks import (
     MONTH_COL,
     append_with_schema_evolution,
+    read_parquet_table,
     table_exists_nonempty,
     write_fact_partitioned,
 )
@@ -130,8 +136,12 @@ def superior_aggregates(
     powiaty: DataFrame,
     execution_date: dt.datetime,
 ) -> DataFrame:
-    """Task 4 (helpers:323-426): the flagship monthly aggregate."""
-    fact = spark.read.parquet(fact_path)
+    """Task 4 (helpers:323-426): the flagship monthly aggregate.
+
+    Returns the aggregate frame; its ``written`` attribute is the
+    ``Observation`` of the rows the sink wrote (``rows``), taken during
+    the write instead of by a second count."""
+    fact = read_parquet_table(spark, fact_path)
     # S7: the 3-month window is bounded on BOTH sides and duplicated on
     # the month PARTITION column. The upper bound makes backfills
     # re-run-safe — without `t < execution_date` a re-run for an old
@@ -193,5 +203,9 @@ def superior_aggregates(
         fill_values={"injection_date": sql_str(inj)},
     ).coalesce(1).sortWithinPartitions("unit_id")
 
-    append_with_schema_evolution(spark, out, agg_path, key_cols=("unit_id", "injection_date"))
+    written = Observation()
+    append_with_schema_evolution(
+        spark, out.observe(written, F.count(F.lit(1)).alias("rows")), agg_path,
+        key_cols=("unit_id", "injection_date"))
+    out.written = written
     return out

@@ -8,12 +8,17 @@ The reference's BigQuery sink semantics, on parquet:
           row-group locality → parquet min/max data skipping);
   * S5  — batched append (helpers:129-169) → a single distributed
           ``mode("append")`` write; 10k-row batching is a pandas artifact;
-  * S6  — existence/non-empty probe (helpers:89-96);
+  * S6  — existence/non-empty probe (helpers:89-96) → parquet footers
+          read on the driver: no Spark job, and the same footer gives the
+          table's schema, so reads skip the schema-inference job too;
   * S13 — two-way schema evolution for the aggregate table
           (helpers:384-408): DataFrame columns missing from the sink are
           backfilled as 0 on historic rows, sink columns missing from the
           DataFrame are added as 0 — read-modify-write on parquet (the
-          Delta-flavored deployment would use mergeSchema + UPDATE);
+          Delta-flavored deployment would use mergeSchema + UPDATE): the
+          merged table is written once to a staging directory and
+          committed with two renames, so the live table is never deleted
+          before its replacement is complete;
   * idempotent month overwrite — dynamic partition overwrite replaces the
           reference's blind append, which double-counts on Airflow
           re-runs (documented deliberate deviation, SURVEY.md §7 M5).
@@ -23,10 +28,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import _parse_datatype_json_string
 
 from building_permissions_etl_spark.functions.expr import sql_ident
 
 MONTH_COL = "month"
+_SPARK_PARQUET = "org.apache.spark.sql.execution.datasources.parquet"
 
 
 def write_fact_partitioned(
@@ -53,35 +60,77 @@ def write_fact_partitioned(
 
 
 def table_exists_nonempty(spark: SparkSession, path: str) -> bool:
-    """S6 (helpers:89-96): EXISTS(SELECT 1 ... LIMIT 1) analog.
+    """S6 (helpers:89-96): EXISTS(SELECT 1 ... LIMIT 1) analog, answered
+    from parquet footers on the driver (``_table_footer``), not by a job.
 
-    Existence is asked of the path's own Hadoop ``FileSystem`` — a
+    Only an absent path, a directory without data files or a table of
+    zero rows is "empty"; any other failure — a corrupt file, a transient
+    read error — raises, because answering False would turn it into a
+    full reload or an overwrite."""
+    found = _table_footer(spark, path)
+    return found is not None and found[1] > 0
+
+
+def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job: the
+    schema comes from one data file's footer, read on the driver and
+    converted as Spark's inference converts it (partition columns are
+    still discovered from the directory names). A column missing from
+    the table therefore stays an analysis error. A path without any data
+    file is left to Spark's reader, which raises as it always has."""
+    found = _table_footer(spark, path)
+    if found is None:
+        return spark.read.parquet(path)
+    converter = _jclass(spark, f"{_SPARK_PARQUET}.ParquetToSparkSchemaConverter")(
+        spark._jsparkSession.sessionState().conf())
+    schema = _jclass(spark, f"{_SPARK_PARQUET}.ParquetFileFormat").readSchemaFromFooter(
+        found[0], converter)
+    return spark.read.schema(_parse_datatype_json_string(schema.json())).parquet(path)
+
+
+def _table_footer(spark: SparkSession, path: str):
+    """(parquet ``Footer``, row count) of the first data file under
+    ``path`` that holds rows — or of the last data file, if none does —
+    read on the driver; None for an absent path or one without data
+    files.
+
+    Files are listed through the path's own Hadoop ``FileSystem`` — a
     driver-local ``os.path.exists`` would be False for EVERY distributed
-    path (s3a://, hdfs://), making the caller treat populated remote
-    tables as missing: ingest would re-load full history every run and
-    schema evolution would destructively overwrite the sink. Only an
-    absent path, a directory without data files (entries named ``_*`` or
-    ``.*`` are metadata or uncommitted output, as Spark's file index
-    treats them) or a table of zero rows is "empty"; any other failure —
-    a corrupt file, a transient read error — raises, because answering
-    False would turn it into a full reload or an overwrite."""
-    sc = spark.sparkContext
-    p = sc._jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
-    if not fs.exists(p) or not _has_data_file(fs, p):
-        return False
-    return not spark.read.parquet(path).limit(1).isEmpty()
+    path (s3a://, hdfs://). Entries named ``_*`` or ``.*`` are skipped,
+    as Spark's file index skips them (metadata, uncommitted output).
+    Footers go through Spark's own reader, so a corrupt one raises
+    CANNOT_READ_FILE_FOOTER; that reader skips the row groups, so the
+    row count takes a second footer read that keeps them."""
+    fs, hpath = _filesystem(spark, path)
+    root = hpath(path)
+    if not fs.exists(root):
+        return None
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    visible = _jclass(spark, "org.apache.hadoop.fs.GlobFilter")("[!_.]*")
+    footers = getattr(_jclass(spark, f"{_SPARK_PARQUET}.ParquetFileFormat$"), "MODULE$")
+    found = None
+    for st in _data_files(fs, root, visible):
+        one = _jclass(spark, "java.util.List").of(st)
+        one = _jclass(spark, "scala.jdk.javaapi.CollectionConverters").asScala(one).toSeq()
+        footer = footers.readParquetFootersInParallel(conf, one, False).head()
+        blocks = _jclass(spark, f"{_SPARK_PARQUET}.ParquetFooterReader").readFooter(
+            _jclass(spark, "org.apache.parquet.hadoop.util.HadoopInputFile").fromStatus(st, conf),
+            _jclass(spark, "org.apache.parquet.format.converter.ParquetMetadataConverter")
+            .NO_FILTER).getBlocks()
+        found = footer, sum(blocks.get(i).getRowCount() for i in range(blocks.size()))
+        if found[1]:
+            break
+    return found
 
 
-def _has_data_file(fs, p) -> bool:
-    """Depth-first: stops at the first visible file under ``p`` (a file
-    path lists as itself)."""
-    for st in fs.listStatus(p):
-        if st.getPath().getName().startswith(("_", ".")):
-            continue
-        if not st.isDirectory() or _has_data_file(fs, st.getPath()):
-            return True
-    return False
+def _data_files(fs, p, visible):
+    """Files under ``p`` whose names pass ``visible``, depth-first and
+    lazily (a file path lists as itself)."""
+    for st in fs.listStatus(p, visible):
+        if st.isDirectory():
+            yield from _data_files(fs, st.getPath(), visible)
+        else:
+            yield st
 
 
 def append_with_schema_evolution(
@@ -100,6 +149,13 @@ def append_with_schema_evolution(
       so the table is rewritten once when the schema grows — the Delta
       deployment replaces this with mergeSchema + UPDATE.
 
+    The rewrite is written once, to ``<path>.__evolving__``, and
+    committed by two renames: live → ``<path>.__previous__``, then
+    staging → live; only then is ``__previous__`` deleted. Only a crash
+    inside that commit leaves ``__previous__`` behind — between the two
+    renames it is the only complete copy of the table — so its presence
+    makes every later call raise and delete nothing.
+
     Count columns are whatever isn't a key column; they are always
     integer-typed zeros, per the reference's INTEGER schema fields.
     ``key_cols`` are the columns that may NEVER be reconciled by
@@ -108,11 +164,20 @@ def append_with_schema_evolution(
     Each side's schema is read once and reconciled with one projection:
     sink columns in sink order, then the new columns in ``df`` order.
     """
+    live = path.rstrip("/")
+    staging, previous = live + ".__evolving__", live + ".__previous__"
+    fs, hpath = _filesystem(spark, live)
+    if fs.exists(hpath(previous)):
+        raise RuntimeError(
+            f"{previous} exists: a schema-growth commit of {live} was "
+            f"interrupted, so {previous} may hold the only complete copy of "
+            f"the table; restore or remove it by hand before writing")
+
     if not table_exists_nonempty(spark, path):
         df.write.mode("overwrite").parquet(path)
         return
 
-    existing = spark.read.parquet(path)
+    existing = read_parquet_table(spark, path)
     df_types, sink_types = dict(df.dtypes), dict(existing.dtypes)
     missing_keys = [k for k in key_cols
                     if k not in df_types or k not in sink_types]
@@ -132,21 +197,29 @@ def append_with_schema_evolution(
         ])
 
     if sink_missing:
+        # parquet can't append new columns in place: write the merged
+        # table beside the live one, then swap it in
         merged = reconcile(existing, sink_types).unionByName(reconcile(df, df_types))
-        # rewrite via a temp path: parquet can't append new columns in place
-        tmp = path.rstrip("/") + ".__evolving__"
-        merged.write.mode("overwrite").parquet(tmp)
-        final = spark.read.parquet(tmp)
-        final.write.mode("overwrite").parquet(path)
-        _rm(tmp)
+        merged.write.mode("overwrite").parquet(staging)
+        for src, dst in ((live, previous), (staging, live)):
+            if not fs.rename(hpath(src), hpath(dst)):
+                raise OSError(f"could not rename {src} to {dst}")
+        fs.delete(hpath(previous), True)
     else:
         reconcile(df, df_types).write.mode("append").parquet(path)
 
 
-def _rm(path: str) -> None:
-    import shutil
+def _filesystem(spark: SparkSession, path: str):
+    """The Hadoop ``FileSystem`` of ``path``, and a constructor of Hadoop
+    paths on it."""
+    jpath = _jclass(spark, "org.apache.hadoop.fs.Path")
+    return jpath(path).getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jpath
 
-    shutil.rmtree(path, ignore_errors=True)
+
+def _jclass(spark: SparkSession, name: str):
+    """The JVM class of fully qualified ``name`` in one py4j round trip
+    (an attribute chain through the packages costs one per segment)."""
+    return getattr(spark.sparkContext._jvm, name)
 
 
 def write_bucketed_table(

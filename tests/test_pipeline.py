@@ -28,8 +28,41 @@ from building_permissions_etl_spark.sources.csv_source import (
     parse_event_time,
     read_permissions_csv,
 )
+from building_permissions_etl_spark.sources.sinks import (
+    append_with_schema_evolution,
+    read_parquet_table,
+    table_exists_nonempty,
+)
 
 EXEC_DATE = dt.datetime(2022, 7, 1)
+KEYS = ("unit_id", "injection_date")
+
+
+def _spark_jobs(spark, fn):
+    """(result of ``fn()``, number of Spark jobs it ran). A marker job
+    closes the job group: the status store sees jobs in order, so once
+    it lists the marker it lists every job ``fn`` ran."""
+    import time
+    import uuid
+
+    sc, group = spark.sparkContext, f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count the jobs of one call")
+    try:
+        result = fn()
+        sc.parallelize([0], 1).count()
+    finally:
+        sc._jsc.clearJobGroup()
+    deadline = time.monotonic() + 30
+    while not (ids := sc.statusTracker().getJobIdsForGroup(group)):
+        assert time.monotonic() < deadline, "marker job never reached the status store"
+        time.sleep(0.05)
+    return result, len(ids) - 1
+
+
+def _tree(path):
+    """relative path → bytes of every file under ``path``."""
+    return {str(f.relative_to(path)): f.read_bytes()
+            for f in sorted(path.rglob("*")) if f.is_file()}
 
 
 def _csv_rows(n=200, kategorias=("I", "II", "V")):
@@ -104,6 +137,8 @@ def test_full_pipeline(spark, powiaty, tmp_path):
     # all kept tercs valid 7-digit or 4-digit matched codes
     bad = loaded.filter(~F.col("terc").rlike(r"^\d{4}(\d{3})?$")).count()
     assert bad == 0
+    # the probe of a populated table reads footers on the driver: no job
+    assert _spark_jobs(spark, lambda: table_exists_nonempty(spark, fact)) == (True, 0)
 
     # --- update-mode ingest is idempotent (dynamic partition overwrite) --
     audit2 = ingest_permissions(spark, csv, fact, powiaty, EXEC_DATE)
@@ -127,6 +162,13 @@ def test_full_pipeline(spark, powiaty, tmp_path):
         want += [f"{r}_{w}" for r in
                  ("budowa", "rozbudowa", "odbudowa", "nadbudowa", "wykonanie")]
     assert out.columns == want
+    # the sink's rows, observed on its write: one per county
+    assert out.written.get == {"rows": 4}
+    # the footer-schema reads run no schema-inference job, and give what
+    # inference gives (the fact's partition column included)
+    for table in (fact, agg):
+        read, jobs = _spark_jobs(spark, lambda t=table: read_parquet_table(spark, t).schema)
+        assert jobs == 0 and read == spark.read.parquet(table).schema
     rows = out.collect()
     # output key set == dim key set, constructively (SURVEY §5 item 3)
     assert sorted(r.unit_id for r in rows) == ["0201", "0463", "1465", "2261"]
@@ -262,6 +304,54 @@ def test_probe_raises_on_unreadable_sink(spark, tmp_path):
                                      key_cols=("unit_id", "injection_date"))
     assert corrupt.read_bytes() == b"not a parquet file"
     assert sorted(p.name for p in path.iterdir()) == [corrupt.name]
+
+
+def test_probe_zero_row_sink_is_empty(spark, tmp_path):
+    """A sink holding only a zero-row parquet file is "empty": the
+    append overwrites it with the new rows and their schema."""
+    path = str(tmp_path / "sink")
+    spark.createDataFrame([], "unit_id string, injection_date string, old int") \
+        .write.parquet(path)
+    assert [f for f in os.listdir(path) if f.endswith(".parquet")]
+    assert not table_exists_nonempty(spark, path)
+    df = spark.createDataFrame([("a", "2022", 1)],
+                               "unit_id string, injection_date string, n int")
+    append_with_schema_evolution(spark, df, path, key_cols=KEYS)
+    assert [tuple(r) for r in spark.read.parquet(path).collect()] == [("a", "2022", 1)]
+    assert spark.read.parquet(path).columns == ["unit_id", "injection_date", "n"]
+
+
+def test_schema_growth_commits_through_staging(spark, tmp_path):
+    """A growing schema rewrites the table once, through a staging
+    directory and two renames that leave nothing beside the table."""
+    path = tmp_path / "sink"
+    first = spark.createDataFrame([("a", "2022-01", 1)],
+                                  "unit_id string, injection_date string, n int")
+    grown = spark.createDataFrame([("b", "2022-02", 2, 3)],
+                                  "unit_id string, injection_date string, n int, m int")
+    append_with_schema_evolution(spark, first, str(path), key_cols=KEYS)
+    append_with_schema_evolution(spark, grown, str(path), key_cols=KEYS)
+    rows = sorted(tuple(r) for r in spark.read.parquet(str(path)).collect())
+    assert rows == [("a", "2022-01", 1, 0), ("b", "2022-02", 2, 3)]
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["sink"]
+
+
+def test_interrupted_swap_is_never_lost(spark, tmp_path):
+    """A ``__previous__`` directory is left only by a crash inside the
+    rename commit and may hold the only complete table: the next append
+    raises, names both directories, and touches neither."""
+    path, previous = tmp_path / "sink", tmp_path / "sink.__previous__"
+    first = spark.createDataFrame([("a", "2022-01", 1)],
+                                  "unit_id string, injection_date string, n int")
+    append_with_schema_evolution(spark, first, str(path), key_cols=KEYS)
+    append_with_schema_evolution(spark, first, str(previous), key_cols=KEYS)
+    before = _tree(path), _tree(previous)
+    grown = spark.createDataFrame([("b", "2022-02", 2, 3)],
+                                  "unit_id string, injection_date string, n int, m int")
+    with pytest.raises(RuntimeError, match="sink.__previous__ exists.*sink "):
+        append_with_schema_evolution(spark, grown, str(path), key_cols=KEYS)
+    assert (_tree(path), _tree(previous)) == before
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["sink", "sink.__previous__"]
 
 
 def test_schema_evolution_refuses_to_zero_fill_keys(spark, tmp_path):
