@@ -55,9 +55,11 @@ def windowed_count_exprs(
     boolean predicate as SQL text (e.g. ``d >= max_d - INTERVAL 60 DAYS``).
     Each column is one ``F.expr`` string — a couple of py4j round trips
     instead of one per ``F.*`` node, which dominated plan construction at
-    ~180 columns. Composite aggregates (the ETL's cells + per-rodzaj
-    marginals, the registry flagship's cells + return-flag marginals)
-    concatenate several lists into that one groupBy."""
+    ~180 columns. A composite aggregate (the registry flagship's cells +
+    return-flag marginals) concatenates several lists into that one
+    groupBy. The list must be known when the plan is built, so it suits
+    fixed cells; the monthly ETL's cells depend on the data, and it
+    pivots a collected long-form aggregate on the driver instead."""
     col = sql_ident(cell_col)
     return [
         F.expr(f"count(CASE WHEN ({wpred}) AND {col} = {sql_str(v)} THEN 1 END)"

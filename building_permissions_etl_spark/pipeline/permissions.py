@@ -11,16 +11,20 @@ Ingest (one CSV scan, one write job — the fuzzy join is broadcast):
     (F3) → partitioned clustered write (S4).
 
 Aggregate (the flagship, §3.3): 3-month scan with pushed-down predicate
-(S7) → county prefix (C1) → one small aggregate finding each window's
-observed (rodzaj, kategoria) cells → ONE groupBy of conditional counts
-for all three windows: pivot cells (A1) + per-type marginals (A2), named
-deromanized/sanitized (C4/C21) — the same single-pass shape as
-``plans/flagship.py::flagship_single_pass`` → injection date/reorder/
-rename (C19/F9/F10) → dim completion as one left join (J2+J3+U1) →
-single-file sorted write (O1), its rows observed → schema-evolving
-append (S13), a growing schema committed by renaming a staging copy in.
-The wide projections are SQL text, so building the ~180-column plan
-costs a few py4j round trips per column, not one per ``F.*`` node.
+(S7) → county prefix (C1) → ONE narrow aggregate, collected: per (unit,
+rodzaj, cell), the conditional counts of all three windows. This long
+form has at most |units| × |observed cells| rows — bounded by the unit
+codes and the rodzaj×kategoria domain (SURVEY.md §7 risk 4), not by the
+input — so it is pivoted on the driver, as the reference's pandas
+``pivot_table`` did (helpers:431): observed pivot cells (A1) + per-type
+marginals (A2), named deromanized/sanitized (C4/C21) → injection date/
+reorder/rename (C19/F9/F10) → dim completion from the dim's collected
+keys (J2+J3+U1) → sorted rows as one Arrow ``LocalRelation`` partition,
+written as one file (O1), its rows observed → schema-evolving append
+(S13), a growing schema committed by renaming a staging copy in. The
+pivot as a ~180-column Spark plan costs more planning and codegen than
+its data; ``plans/flagship.py`` can use that shape because its cells are
+fixed and need no collect, while these depend on the data.
 
 No step runs a job only to read metadata: the sink probes and the
 fact's and sink's schemas come from parquet footers read on the driver
@@ -31,14 +35,14 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from building_permissions_etl_spark.functions.expr import sql_ident, sql_str
 from building_permissions_etl_spark.functions.roman import INT_OF_ROMAN
 from building_permissions_etl_spark.functions.text import sanitize_column_names
-from building_permissions_etl_spark.operators.aggregates import windowed_count_exprs
-from building_permissions_etl_spark.operators.joins import complete_via_left_join
 from building_permissions_etl_spark.operators.terc import (
     correct_terc,
     correction_audit_exprs,
@@ -136,7 +140,8 @@ def superior_aggregates(
     powiaty: DataFrame,
     execution_date: dt.datetime,
 ) -> DataFrame:
-    """Task 4 (helpers:323-426): the flagship monthly aggregate.
+    """Task 4 (helpers:323-426): the flagship monthly aggregate — one
+    narrow Spark aggregate, pivoted and dim-completed on the driver.
 
     Returns the aggregate frame; its ``written`` attribute is the
     ``Observation`` of the rows the sink wrote (``rows``), taken during
@@ -156,8 +161,8 @@ def superior_aggregates(
     # to midnight, mirroring nothing in the reference's relativedelta).
     # Every bound is SQL text over ONE timestamp literal, read in the
     # session time zone like the fact's event times and month column, so
-    # the pruning filter, the observed-cell flags and the counts cannot
-    # disagree on where a window starts.
+    # the pruning filter and the window counts cannot disagree on where
+    # a window starts.
     t, month = sql_ident(EVENT_TIME_COL), sql_ident(MONTH_COL)
     end = f"TIMESTAMP {sql_str(execution_date.isoformat(' '))}"
     bounds = {f"{n}m": f"{end} - INTERVAL {n} MONTHS" for n in (3, 2, 1)}
@@ -173,35 +178,55 @@ def superior_aggregates(
         EVENT_TIME_COL,
     )
 
-    # Observed cells only — reference parity: pandas pivot_table mints
-    # columns per observed (rodzaj, kategoria) pair (helpers:431), which
-    # is exactly what feeds the sink's schema evolution (S13). One small
-    # aggregate flags which windows saw each cell; the domain is bounded
-    # (≤ 5×30 rows, SURVEY.md §7 risk 4). Cells keep pivot()'s ascending
-    # order, then come the five marginals.
-    seen = base.groupBy("cell").agg(
-        *[F.expr(f"max({pred}) AS {sql_ident(s)}") for s, pred in windows.items()]
+    # The workers reduce the window to its long form, each (unit, rodzaj,
+    # cell)'s count in each window; at most |units| × |observed cells|
+    # rows — the 4-digit unit codes times the ≤ 5×30 rodzaj×kategoria
+    # domain — however large the input, so the driver can pivot it.
+    long_form = base.groupBy("unit_id", "rodzaj_zam_budowlanego", "cell").agg(
+        *[F.expr(f"count_if({pred}) AS {sql_ident(s)}") for s, pred in windows.items()]
     ).collect()
-    counts = []
-    for suffix, pred in windows.items():
-        cells = sorted(r["cell"] for r in seen if r[suffix])
-        counts += windowed_count_exprs(
-            "cell", cells, {suffix: pred}, alias_fmt=_cell_column)
-        counts += windowed_count_exprs(
-            "rodzaj_zam_budowlanego", EXPECTED_RODZAJ_TYPES, {suffix: pred},
-            alias_fmt=lambda r, s: sanitize_column_names([f"{_short_rodzaj(r)}_{s}"])[0])
 
+    # Observed cells only — reference parity: pivot_table mints columns
+    # per observed (rodzaj, kategoria) pair, which is exactly what feeds
+    # the sink's schema evolution (S13). Per window: the cells counted in
+    # it in ascending order (A1, C4/C21 names), then the five marginals
+    # (A2) — the sums over rows of exactly that rodzaj.
+    position, names = {}, ["unit_id", "injection_date"]
+    for s in windows:
+        for cell in sorted({r["cell"] for r in long_form if r[s]}):
+            position["cell", cell, s] = len(position)
+            names.append(_cell_column(cell, s))
+        for rodzaj in EXPECTED_RODZAJ_TYPES:
+            position["rodzaj", rodzaj, s] = len(position)
+            names.append(sanitize_column_names([f"{_short_rodzaj(rodzaj)}_{s}"])[0])
+    counts: dict = {}
+    for r in long_form:
+        if r["unit_id"] is None:       # a NULL unit never matches the dim
+            continue
+        row = counts.setdefault(r["unit_id"], [0] * len(position))
+        for s in windows:
+            # a cell has no column in a window where it counted nothing
+            for k in (("cell", r["cell"], s), ("rodzaj", r["rodzaj_zam_budowlanego"], s)):
+                if k in position:
+                    row[position[k]] += r[s]
+
+    # J2+J3+U1: one row per dim row (duplicates kept), units outside the
+    # dim dropped, absent counts 0 (C19/F9/F10: constant injection date),
+    # sorted by unit with NULLs first (O1). Built from an Arrow table, so
+    # the frame is a LocalRelation: no Python worker, no plan to compile.
+    key = powiaty.schema["JPT_KOD_JE"]
+    units = sorted((r[0] for r in powiaty.select(key.name).collect()),
+                   key=lambda u: (u is not None, u))
+    rows = [counts.get(u, [0] * len(position)) for u in units]
     inj = execution_date.strftime("%Y-%m-%d %H:%M:%S.%f")[:-3] + " UTC"
-    agg = base.groupBy("unit_id").agg(F.lit(inj).alias("injection_date"), *counts)
-
-    # fused J2+J3+U1: dim LEFT JOIN evaluates the aggregate once, where
-    # the semi+anti+union shape would evaluate it twice. The result has
-    # at most |dim| rows, so one sorted partition replaces a global
-    # orderBy and its range-sampling job (and writes one file).
-    out = complete_via_left_join(
-        agg, powiaty.select("JPT_KOD_JE"), "unit_id", "JPT_KOD_JE",
-        fill_values={"injection_date": sql_str(inj)},
-    ).coalesce(1).sortWithinPartitions("unit_id")
+    columns = [units, [inj] * len(units)] + [[row[i] for row in rows] for i in range(len(position))]
+    table = pa.Table.from_arrays([pa.array(c) for c in columns], names=names)
+    schema = StructType(
+        [StructField("unit_id", key.dataType, key.nullable),
+         StructField("injection_date", StringType(), False)]
+        + [StructField(n, LongType(), False) for n in names[2:]])
+    # one partition, so the sink writes one file
+    out = spark.createDataFrame(table, schema).coalesce(1)
 
     written = Observation()
     append_with_schema_evolution(

@@ -19,13 +19,15 @@ Two implementations behind one output contract:
     aggregates full-outer-joined then zero-filled (helpers:351-362,535-553).
   * ``flagship_single_pass`` — the idiomatic Spark shape: ONE shuffle,
     conditional aggregation (SURVEY.md §2.4 note). At 100 TB this reads the
-    fact once and shuffles one pre-aggregated stream instead of three. The
-    monthly ETL (``pipeline/permissions.py::superior_aggregates``) shares
-    this shape, built from the same ``windowed_count_exprs`` and
-    ``complete_via_left_join``. Both emit their wide projections as SQL
-    text (one ``F.expr`` per count, one ``selectExpr`` for the
-    completion), so construction costs a few py4j round trips per column
-    instead of one per ``F.*`` node.
+    fact once and shuffles one pre-aggregated stream instead of three. Its
+    wide projections are SQL text (one ``F.expr`` per count, one
+    ``selectExpr`` for the completion), so construction costs a few py4j
+    round trips per column instead of one per ``F.*`` node, and no job:
+    its cells are fixed. The monthly ETL
+    (``pipeline/permissions.py::superior_aggregates``) does not share
+    this shape: its cells depend on the data, so it must collect before
+    it knows its columns, and it collects a narrow long-form aggregate
+    that it pivots on the driver instead of planning ~180 columns.
 
 A parity test pins both to identical results; ``flagship_oracle_sql``
 returns the DuckDB oracle.

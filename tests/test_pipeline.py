@@ -10,11 +10,17 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from building_permissions_etl_spark.functions.expr import sql_ident, sql_str
+from building_permissions_etl_spark.functions.text import sanitize_column_names
+from building_permissions_etl_spark.operators.aggregates import windowed_count_exprs
+from building_permissions_etl_spark.operators.joins import complete_via_left_join
 from building_permissions_etl_spark.operators.terc import (
     correct_terc,
     correction_audit_metrics,
 )
 from building_permissions_etl_spark.pipeline.permissions import (
+    _cell_column,
+    _short_rodzaj,
     first_day_of_previous_month,
     ingest_permissions,
     superior_aggregates,
@@ -32,6 +38,7 @@ from building_permissions_etl_spark.sources.sinks import (
     append_with_schema_evolution,
     read_parquet_table,
     table_exists_nonempty,
+    write_fact_partitioned,
 )
 
 EXEC_DATE = dt.datetime(2022, 7, 1)
@@ -149,7 +156,16 @@ def test_full_pipeline(spark, powiaty, tmp_path):
 
     # --- flagship aggregate ---------------------------------------------
     spark.catalog.clearCache()
-    out = superior_aggregates(spark, fact, agg, powiaty, EXEC_DATE)
+    out, jobs = _spark_jobs(
+        spark, lambda: superior_aggregates(spark, fact, agg, powiaty, EXEC_DATE))
+    # one narrow aggregate (two AQE jobs), the dim-key collect and the
+    # write; the pivot as a wide Spark plan takes 5
+    assert jobs <= 4
+    # the wide frame is driver data: its optimized plan reads a LocalRelation
+    leaf = out._jdf.queryExecution().optimizedPlan()
+    while leaf.children().nonEmpty():
+        leaf = leaf.children().head()
+    assert leaf.nodeName() == "LocalRelation"
     # nothing cached is left behind in the long-lived session
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     # observed-only columns per window (kategoria I only in April, II in
@@ -250,6 +266,72 @@ def test_superior_aggregates_excludes_future_months(spark, tmp_path):
     # only the April row counts; the July row (after the logical date)
     # must be invisible to this run
     assert max(counts) == 1, row
+
+
+def _wide_spark_aggregate(spark, fact_path, powiaty, execution_date):
+    """The aggregate as one ~180-column Spark plan — observed cells from
+    a small aggregate, one groupBy of conditional counts, dim completion
+    by a left join, a sorted single partition: the differential oracle of
+    ``superior_aggregates``, which reshapes a narrow aggregate on the
+    driver instead."""
+    t = sql_ident(EVENT_TIME_COL)
+    end = f"TIMESTAMP {sql_str(execution_date.isoformat(' '))}"
+    windows = {f"{n}m": f"{t} >= {end} - INTERVAL {n} MONTHS" for n in (3, 2, 1)}
+    base = spark.read.parquet(fact_path).filter(f"{windows['3m']} AND {t} < {end}").select(
+        F.substring("terc", 1, 4).alias("unit_id"),
+        "rodzaj_zam_budowlanego",
+        F.concat_ws("|", "rodzaj_zam_budowlanego", "kategoria").alias("cell"),
+        EVENT_TIME_COL,
+    )
+    seen = base.groupBy("cell").agg(
+        *[F.expr(f"max({p}) AS {sql_ident(s)}") for s, p in windows.items()]).collect()
+    counts = []
+    for s, p in windows.items():
+        counts += windowed_count_exprs(
+            "cell", sorted(r["cell"] for r in seen if r[s]), {s: p}, alias_fmt=_cell_column)
+        counts += windowed_count_exprs(
+            "rodzaj_zam_budowlanego", EXPECTED_RODZAJ_TYPES, {s: p},
+            alias_fmt=lambda r, w: sanitize_column_names([f"{_short_rodzaj(r)}_{w}"])[0])
+    inj = execution_date.strftime("%Y-%m-%d %H:%M:%S.%f")[:-3] + " UTC"
+    agg = base.groupBy("unit_id").agg(F.lit(inj).alias("injection_date"), *counts)
+    return complete_via_left_join(
+        agg, powiaty.select("JPT_KOD_JE"), "unit_id", "JPT_KOD_JE",
+        fill_values={"injection_date": sql_str(inj)},
+    ).coalesce(1).sortWithinPartitions("unit_id")
+
+
+def test_aggregate_matches_wide_spark_plan(spark, tmp_path):
+    """The driver reshape of the narrow aggregate gives the columns
+    (names, order, types) and the ordered rows of the wide Spark plan,
+    on the edge cases of its cells, units and dim keys."""
+    r0, r1, r2, r3 = EXPECTED_RODZAJ_TYPES[:4]
+    rows = [
+        ("1465011", r0, "I", dt.datetime(2022, 4, 20)),     # every window
+        ("1465011", r1, "II", dt.datetime(2022, 3, 10)),    # 3m and 2m
+        ("1465011", r0, "I", dt.datetime(2022, 1, 15)),     # before the windows
+        ("1465011", r0, "I", dt.datetime(2022, 5, 10)),     # after the logical date
+        ("0201011", r0, None, dt.datetime(2022, 2, 10)),    # NULL kategoria
+        ("0201011", None, "III", dt.datetime(2022, 4, 2)),  # NULL rodzaj
+        ("9999011", r2, "IV", dt.datetime(2022, 4, 3)),     # unit outside the dim
+        (None, r3, "V", dt.datetime(2022, 4, 4)),           # NULL unit
+        ("1465011", "Rozbiórka `x' \\ y", "Ź'\\`", dt.datetime(2022, 3, 5)),
+    ]
+    fact = spark.createDataFrame(
+        rows, "terc string, rodzaj_zam_budowlanego string, kategoria string,"
+              " data_wplywu_wniosku_do_urzedu timestamp")
+    fact_path = str(tmp_path / "fact")
+    write_fact_partitioned(fact, fact_path, EVENT_TIME_COL, "terc")
+    powiaty = spark.createDataFrame(
+        [("1465",), ("2261",), (None,), ("0201",), ("1465",)], "JPT_KOD_JE string")
+    when = dt.datetime(2022, 5, 1)
+
+    out = superior_aggregates(spark, fact_path, str(tmp_path / "agg"), powiaty, when)
+    want = _wide_spark_aggregate(spark, fact_path, powiaty, when)
+    assert out.schema == want.schema
+    got = out.collect()
+    assert got == want.collect()
+    assert [r.unit_id for r in got] == [None, "0201", "1465", "1465", "2261"]
+    assert "Rozbiórka_`x'_\\_y|Ź'\\`_3m" in out.columns
 
 
 def test_aggregate_quotes_cell_text(spark, tmp_path):
