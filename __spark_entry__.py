@@ -7,7 +7,7 @@ without an oracle get the driver's weaker rows-only check (documented
 per-query in the registry module).
 
 The real registry lives in ``building_permissions_etl_spark.plans.registry``
-so tests and bench.py share it.
+so the tests and ``perfbench`` share it.
 """
 
 from __future__ import annotations

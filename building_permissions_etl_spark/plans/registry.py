@@ -1,55 +1,12 @@
 """Query registry: name → (spark callable, duckdb oracle SQL).
 
 This is the single source of truth behind ``__spark_entry__.queries()`` /
-``oracle_sql()``, the local parity tests, and ``bench.py``. Each entry maps
-an operator (or operator composition) from SURVEY.md §2 onto the driver
-fixture tables; queries registered without SQL are those whose semantics
-are not ANSI-SQL-expressible (HLL state, trained index, stub codecs) —
-the driver records a rows-only check for those.
-
-Registration ORDER is a driver contract: the grading driver verifies only
-the FIRST 50 registry entries per round (CORRECTNESS_r01 capped there).
-``_DRIVER_WINDOW`` pins which 50 land in the round-14 window, recomputed
-mechanically from the per-query verdict history of CORRECTNESS_r01-r13
-(newest-verdict round per query), then prioritized per the round-13
-rotation queue:
-
-  1. the TWO round-14 additions (`plans/round14_queries.py` —
-     `zorder_layout_compacted_skip`, OPTIMIZE bin-packing on the
-     fragmented z-file layout: only multi-file partitions rewritten,
-     extents carried over verbatim, the probe's executed-scan
-     numFiles dropping back to n_candidate_files; and
-     `zorder_layout_lifecycle_skip`, the full loop — append →
-     compact → append again with the extent table merged, carried
-     across the rewrite, and merged again; the probe box straddles
-     all three ingests so the candidate set mixes packed and
-     re-fragmented directories) plus the two
-     round-13 queries whose CODE changed closing the round-13 ADVICE
-     items (dead-evidence rule): `zorder_layout_incremental_skip`
-     (base extents now materialized before the delta append) and
-     `cusum_state_persisted_probe` (BIGINT headroom guard on the
-     persisted shard partials). `zorder_partitioned_file_skip` is
-     byte-unchanged (oracle hoist pinned sha256-identical), so its
-     r13 verdict stays live;
-  2. the FOURTEEN r09-cohort leftovers (`region_rollup_with_default`
-     .. `zorder_extent_merge`), five rounds without a verdict — the
-     registry's oldest evidence (`zorder_extent_merge` also carries
-     the round-14 quantizer fold, sha256-pinned byte-identical);
-  3. THIRTY-TWO of the 48-query r10 cohort (alphabetical —
-     `basket_lift_brands` .. `range_join_clicks_errors`); the
-     remaining 16 (`recursive_key_chain` .. `volume_shipping`) head
-     the round-15 queue.
-
-The six rows-only sketch twins (approx/HLL/theta/KLL) never re-enter
-the window: they took their designed rows-only verdicts and are each
-pinned to an exact oracle-backed twin by pytest — a window slot spent
-on a hash-uncheckable row is a slot wasted.
-
-Local tri-scale parity (scripts/oracle_check.py at sf0.001/0.01/0.1)
-covers ALL queries every round regardless of window; the staleness
-table in QUERIES.md (generated by scripts/gen_query_docs.py) keeps the
-rotation mechanical, and tests/test_registry_contract.py pins the
-window composition.
+``oracle_sql()`` and the local parity tests. Each entry maps an operator
+(or operator composition) from SURVEY.md §2 onto the fixture tables;
+queries registered without SQL are those whose semantics are not
+ANSI-SQL-expressible (HLL state, trained index, stub codecs) and take a
+rows-only check. Entries are held in contribution order; callers look
+queries up by name, and no caller may depend on the order.
 """
 
 from __future__ import annotations
@@ -60,89 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 # Each module contributes {name: (callable, sql_or_None)}.
 _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {}
-
-# The 50 entries the driver will verify this round (see module docstring).
-# Round-14 composition (recomputed from CORRECTNESS_r01-r13 via
-# scripts/gen_query_docs.py --suggest, excluding the six rows-only
-# sketch twins by design, then prioritized per the round-13 rotation
-# queue + the dead-evidence rule):
-#   1. the two round-14 additions (z-file layout COMPACTION:
-#      OPTIMIZE bin-packing, probe numFiles back to
-#      n_candidate_files; and the LIFECYCLE loop: append → compact →
-#      append again, extent table merged-carried-merged, candidate
-#      set mixing packed and re-fragmented dirs) plus the two
-#      round-13 queries whose code changed closing ADVICE items
-#      (incremental skip: base extents materialized pre-append;
-#      CUSUM probe: BIGINT headroom guard);
-#   2. the 14 r09-cohort leftovers (five rounds without a verdict —
-#      the registry's oldest evidence);
-#   3. 32 of the 48-query r10 cohort, alphabetical; the remaining
-#      16 (`recursive_key_chain` .. `volume_shipping`) head the
-#      round-15 queue.
-_DRIVER_WINDOW = [
-    # -- 1. round-14 additions + dead-evidence re-entries --
-    "zorder_layout_compacted_skip",
-    "zorder_layout_lifecycle_skip",
-    "zorder_layout_incremental_skip",
-    "cusum_state_persisted_probe",
-    # -- 2. the 14 r09-cohort leftovers (oldest evidence) --
-    "region_rollup_with_default",
-    "salted_group_count",
-    "salted_join_segments",
-    "shipping_priority_topk",
-    "similarity_topk_bruteforce",
-    "sql_revenue_by_status",
-    "stream_dedup_keys",
-    "stream_stream_join",
-    "tfidf_top_terms",
-    "topk_per_group",
-    "unigram_logprob",
-    "unpivot_cells_long",
-    "weekly_anchor_interpolation",
-    "zorder_extent_merge",
-    # -- 3. r10 cohort, alphabetical fill (basket_lift_brands ..
-    #       range_join_clicks_errors; the remaining 16 head the
-    #       round-15 queue) --
-    "basket_lift_brands",
-    "brand_range_revenue",
-    "chunk_documents_32",
-    "customer_order_distribution",
-    "dominant_part_suppliers",
-    "dormant_high_balance_customers",
-    "event_funnel_conversion",
-    "event_sessionization",
-    "event_transition_matrix",
-    "forecast_revenue",
-    "gapfill_daily_forward_fill",
-    "gopher_rule_filter",
-    "grouping_sets_order_stats",
-    "histogram_shard_merge",
-    "histogram_snapshot_price",
-    "large_volume_customers",
-    "last_shipper_per_order",
-    "lineitem_stats_by_flag",
-    "min_cost_supplier_per_part",
-    "mixture_resample_counts",
-    "mixture_temperature_resample",
-    "monthly_cohort_retention",
-    "national_market_share",
-    "native_session_window",
-    "order_lines_with_ordinality",
-    "order_priority_checking",
-    "part_value_concentration",
-    "price_regression_by_flag",
-    "priority_shipping_split",
-    "product_profit_by_nation",
-    "promo_revenue_share",
-    "range_join_clicks_errors",
-]
-
-
-def register(name: str, fn: Callable[[SparkSession, str], DataFrame],
-             sql: str | None) -> None:
-    if name in _REGISTRY:
-        raise ValueError(f"duplicate query name {name!r}")
-    _REGISTRY[name] = (fn, sql)
 
 
 def _populate() -> None:
@@ -211,18 +85,11 @@ def _populate() -> None:
     round13_queries.contribute(stage)
     round14_queries.contribute(stage)
 
-    # driver window first (KeyError here = window names drifted from the
-    # contributors), then everything else in contribution order. Built
-    # into a LOCAL dict and committed atomically: a mid-loop KeyError
-    # must not leave _REGISTRY partially filled, or a caller that
-    # catches and retries would hit the `if _REGISTRY: return`
-    # short-circuit and silently serve a truncated driver window.
-    ordered: dict[str, tuple] = {}
-    for name in _DRIVER_WINDOW:
-        ordered[name] = staged.pop(name)
-    ordered.update(staged)
-    for name, (fn, sql) in ordered.items():
-        register(name, fn, sql)
+    # Staged into a LOCAL dict and committed at the end: a contributor
+    # that raises must not leave _REGISTRY partially filled, or a caller
+    # that catches and retries would hit the `if _REGISTRY: return`
+    # short-circuit and silently serve a truncated registry.
+    _REGISTRY.update(staged)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -1,11 +1,11 @@
 """Generate QUERIES.md — the query inventory grouped by contributor
-module, with each query's correctness-check type, plus the
-driver-verdict staleness table. Run after adding queries:
+module, with each query's correctness-check type. Run after adding
+queries:
 
     python scripts/gen_query_docs.py             # rewrite QUERIES.md
-    python scripts/gen_query_docs.py --suggest   # also print the
-        # recommended next _DRIVER_WINDOW (never-verified first, then
-        # oldest cohorts, oracle-backed only beyond the no-verdict set)
+
+``tests/test_query_docs.py`` asserts ``render()`` equals the committed
+file, so a dropped or renamed query, or a lost oracle, fails the tests.
 """
 
 from __future__ import annotations
@@ -45,46 +45,8 @@ MODULES = [
 ]
 
 
-def _staleness_rows() -> list[str]:
-    """Newest driver-green round per registry query, from the
-    CORRECTNESS_r*.json files the grading driver writes — the table that
-    keeps _DRIVER_WINDOW rotation mechanical (VERDICT r05 item 7)."""
-    import glob
-    import json
-
-    root = os.path.join(os.path.dirname(__file__), "..")
-    newest: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        rnd = int(path.rsplit("_r", 1)[1].split(".")[0])
-        for q, v in json.load(open(path)).items():
-            ok = (v.get("rows_match") and v.get("schema_match")
-                  and v.get("hash_match") in (True, None))
-            if ok:
-                newest[q] = max(newest.get(q, 0), rnd)
-    from building_permissions_etl_spark.plans.registry import queries
-
-    by_round: dict[int, list[str]] = {}
-    for q in queries():
-        by_round.setdefault(newest.get(q, 0), []).append(q)
-    lines = [
-        "## Driver-verdict staleness",
-        "",
-        "Newest driver-green round per query (0 = no driver verdict yet —",
-        "front of the next rotation). Generated from CORRECTNESS_r*.json;",
-        "regenerate after each round.",
-        "",
-        "| Newest green | Count | Queries |",
-        "|---|---|---|",
-    ]
-    for rnd in sorted(by_round):
-        label = f"r{rnd:02d}" if rnd else "never"
-        qs = ", ".join(f"`{q}`" for q in sorted(by_round[rnd]))
-        lines.append(f"| {label} | {len(by_round[rnd])} | {qs} |")
-    lines.append("")
-    return lines
-
-
-def main() -> None:
+def render() -> str:
+    """QUERIES.md's text, built from each contributor's registrations."""
     import importlib
 
     sections = []
@@ -121,50 +83,15 @@ def main() -> None:
         for name, has in entries:
             lines.append(f"| `{name}` | {'DuckDB oracle' if has else 'rows-only + unit tests'} |")
         lines.append("")
-    lines.extend(_staleness_rows())
+    return "\n".join(lines)
+
+
+def main() -> None:
     out = os.path.join(os.path.dirname(__file__), "..", "QUERIES.md")
     with open(out, "w", encoding="utf-8") as f:
-        f.write("\n".join(lines))
-    print(f"wrote QUERIES.md: {total} queries, {oracled} oracle-checked")
-
-
-def suggest_window(size: int = 50) -> list[str]:
-    """Mechanical next-round window: every query with NO driver verdict
-    (they must take one the round they exist), then whole staleness
-    cohorts oldest-first until ``size`` is reached (partial cohort
-    admitted alphabetically)."""
-    import glob
-    import json
-
-    root = os.path.join(os.path.dirname(__file__), "..")
-    newest: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        rnd = int(path.rsplit("_r", 1)[1].split(".")[0])
-        for q, v in json.load(open(path)).items():
-            ok = (v.get("rows_match") and v.get("schema_match")
-                  and v.get("hash_match") in (True, None))
-            if ok:
-                newest[q] = max(newest.get(q, 0), rnd)
-    from building_permissions_etl_spark.plans.registry import queries
-
-    by_round: dict[int, list[str]] = {}
-    for q in queries():
-        by_round.setdefault(newest.get(q, 0), []).append(q)
-    window: list[str] = []
-    for rnd in sorted(by_round):
-        cohort = sorted(by_round[rnd])
-        room = size - len(window)
-        if room <= 0:
-            break
-        window.extend(cohort[:room])
-    return window
+        f.write(render())
+    print("wrote QUERIES.md")
 
 
 if __name__ == "__main__":
     main()
-    if "--suggest" in sys.argv:
-        names = suggest_window()
-        print("\nsuggested next _DRIVER_WINDOW (paste into "
-              "plans/registry.py after review):")
-        for n in names:
-            print(f'    "{n}",')

@@ -1,11 +1,12 @@
 """Oracle parity sweep — the repo's own correctness gate.
 
 Runs every registry query with a VANILLA SparkSession (none of the
-engine's session-factory configs, like the grading driver) and compares
-row counts, sorted column names, and normalized row values against the
-DuckDB oracles at sf0.01. Also probes determinism and bad-path errors.
+engine's session-factory configs) and compares row counts, sorted column
+names, and normalized row values against the DuckDB oracles at sf0.01.
+Also probes determinism and bad-path errors.
 
     python scripts/oracle_check.py [sf_dir]
+    ONLY=q1,q2 python scripts/oracle_check.py [sf_dir]   # named queries only
 """
 import sys, math, datetime, traceback
 
@@ -17,42 +18,26 @@ SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
-# Fully vanilla session, default driver heap, matching the grading
-# driver exactly. (Round 4 needed a 4g override here: iterative-operator
-# localCheckpoint residue accumulated across 139 back-to-back queries
-# and OOMed a 1 GiB driver at sf0.1. Round 5's tracked checkpoint
-# release — operators/dedup.py:_local_checkpoint_tracked — frees each
-# generation's RDD blocks as soon as it is superseded, so the default
-# heap holds again; this script staying override-free is the regression
-# gate for that.)
+# Fully vanilla session, default driver heap. (Round 4 needed a 4g
+# override here: iterative-operator localCheckpoint residue accumulated
+# across 139 back-to-back queries and OOMed a 1 GiB driver at sf0.1.
+# Round 5's tracked checkpoint release —
+# operators/dedup.py:_local_checkpoint_tracked — frees each generation's
+# RDD blocks as soon as it is superseded, so the default heap holds
+# again; this script staying override-free is the regression gate.)
 #
-# The session is RECYCLED every 25 queries. The grading driver
-# verifies 50 queries per session, never 202: at 202 registry queries
-# × sf0.1 a single 1 GiB session OOMs at the margin (observed round 8
-# — the failing query floats between runs: power iteration in one,
-# star survivors in the next; every query is individually green, star
-# fits standalone in a 700m heap). Per-query clearCache + gc.collect
-# help but cannot fully drain py4j's ASYNCHRONOUS detach queue, so
-# JVM-side expression trees from large-plan queries (CRS series,
-# column profile, corpus loops) stay reachable for a while after
-# Python drops them — genuine reachable residue, not a leak with an
-# owner. Chunked sessions bound that residue without touching the
-# no-heap-override contract inside each session; 25 keeps the heavy
-# d-prefix family (decontaminate/dedup, incl. both iterative CC
-# queries) at the START of a fresh session. SESSION_CHUNK=0 restores
-# the single-session stress mode (still green at sf0.01 — proven
-# end-to-end this round; the driver never runs sf0.1).
+# The session is RECYCLED every 25 queries: at 200+ registry queries ×
+# sf0.1 a single 1 GiB session OOMs at the margin (observed round 8 —
+# the failing query floats between runs; every query is individually
+# green). Per-query clearCache + gc.collect cannot fully drain py4j's
+# ASYNCHRONOUS detach queue, so JVM-side expression trees from
+# large-plan queries stay reachable for a while after Python drops
+# them. Chunked sessions bound that residue without a heap override;
+# 25 keeps the heavy d-prefix family (decontaminate/dedup, incl. both
+# iterative CC queries) at the START of a fresh session.
+# SESSION_CHUNK=0 runs one session for the whole sweep (green at
+# sf0.01).
 SESSION_CHUNK = int(__import__("os").environ.get("SESSION_CHUNK", "25"))
-
-# DRIVER_ORDER=1 switches the sweep from the alphabetical full-registry
-# pass to the grading driver's EXACT execution pattern: the first 50
-# registry entries (the _DRIVER_WINDOW slice) in REGISTRATION order,
-# one vanilla session, no recycling. The alphabetical chunked sweep
-# cannot reproduce that pattern (different order, different session
-# boundaries), and round 8 showed order/session-lifetime effects are
-# real — run this mode once per round after the window rotates.
-DRIVER_ORDER = int(__import__("os").environ.get("DRIVER_ORDER", "0"))
-
 
 def make_session() -> SparkSession:
     s = (SparkSession.builder.master("local[8]")
@@ -104,7 +89,7 @@ print(f"entry(): {n} rows", "OK" if n == 25 else "UNEXPECTED (want 25)")
 # 2. parity sweep
 qs, osql = E.queries(), E.oracle_sql()
 fails = []
-sweep_names = list(qs)[:50] if DRIVER_ORDER else sorted(qs)
+sweep_names = sorted(qs)
 # ONLY=a,b,c restricts the sweep to named queries — a spot-check tool
 # for optimization iterations; the round gate is always the full sweep.
 _only = __import__("os").environ.get("ONLY")
@@ -112,7 +97,7 @@ if _only:
     keep = {x.strip() for x in _only.split(",") if x.strip()}
     sweep_names = [n for n in sweep_names if n in keep]
 for qi, name in enumerate(sweep_names):
-    if not DRIVER_ORDER and SESSION_CHUNK and qi and qi % SESSION_CHUNK == 0:
+    if SESSION_CHUNK and qi and qi % SESSION_CHUNK == 0:
         spark.stop()
         spark = make_session()
     try:
@@ -207,5 +192,4 @@ if fails:
         print(f"  FAIL  {n_}: {m}")
     sys.exit(1)
 print(f"ALL GREEN: {len(sweep_names)} queries, "
-      f"{len([n for n in sweep_names if n in osql])} oracle-checked"
-      + (" [driver-order window mode]" if DRIVER_ORDER else ""))
+      f"{len([n for n in sweep_names if n in osql])} oracle-checked")

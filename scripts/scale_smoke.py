@@ -101,7 +101,7 @@ def main() -> None:
     from building_permissions_etl_spark.plans.flagship import flagship_single_pass
 
     def timed(label, thunk):
-        # construct+exec window (same as bench.py r11+, ADVICE r10):
+        # construct+exec window (ADVICE r10):
         # the thunk builds the plan inside the timer, so eager
         # construction work (collect prunes, iterative loops) is charged
         t0 = time.time()

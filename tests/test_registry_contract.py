@@ -16,7 +16,8 @@ from building_permissions_etl_spark.plans.registry import oracle_sql, queries
 # percentile_approx) — each has an exact oracle-backed twin registered
 # beside it (count_distinct_dates / quarterly_distinct_users /
 # weekly_user_overlap_exact / doc_length_quantiles+mad_outliers_by_type)
-# so the driver still verifies the exact semantics the sketch tracks.
+# so the DuckDB oracle still verifies the exact semantics the sketch
+# tracks.
 ROWS_ONLY = {
     "approx_count_distinct_dates",      # HLL++ twin of count_distinct_dates
     "mad_outliers_by_type_approx",      # GK-sketch twin of mad_outliers_by_type
@@ -37,68 +38,6 @@ def test_oracle_keys_subset_of_queries():
 def test_rows_only_set_is_exactly_the_documented_one():
     rows_only = set(queries()) - set(oracle_sql())
     assert rows_only == ROWS_ONLY
-
-
-def test_driver_window_matches_round14_rotation():
-    """The first 50 registry entries (the slice the driver verifies)
-    must match _DRIVER_WINDOW exactly, and the round-14 window must
-    front-load (a) the two round-14 additions
-    (`zorder_layout_compacted_skip` and
-    `zorder_layout_lifecycle_skip` — never verified) plus the two
-    round-13 queries whose code changed closing the round-13 ADVICE
-    items (dead-evidence rule), (b) the 14 r09-cohort leftovers (five
-    rounds without a verdict, the oldest evidence in the registry),
-    and (c) 32 of the 48-query r10 cohort, alphabetical; the 16 r10
-    leftovers are pinned by name so the round-15 queue stays
-    mechanical."""
-    from building_permissions_etl_spark.plans.registry import _DRIVER_WINDOW
-
-    names = list(queries())
-    o = set(oracle_sql())
-    assert len(_DRIVER_WINDOW) == 50
-    assert names[:50] == _DRIVER_WINDOW
-    # every windowed query is oracle-backed (the rows-only sketch
-    # twins all took their designed rows-only verdict in r08 and
-    # rotate out — a window slot spent on a hash-uncheckable row is a
-    # slot wasted)
-    assert set(names[:50]) <= o
-    head = {
-        "zorder_layout_compacted_skip",    # round-14 additions
-        "zorder_layout_lifecycle_skip",
-        "zorder_layout_incremental_skip",  # ADVICE fix: pre-append extents
-        "cusum_state_persisted_probe",     # ADVICE fix: headroom guard
-    }
-    r09_leftovers = {
-        "region_rollup_with_default",
-        "salted_group_count", "salted_join_segments",
-        "shipping_priority_topk", "similarity_topk_bruteforce",
-        "sql_revenue_by_status", "stream_dedup_keys",
-        "stream_stream_join", "tfidf_top_terms", "topk_per_group",
-        "unigram_logprob", "unpivot_cells_long",
-        "weekly_anchor_interpolation", "zorder_extent_merge",
-    }
-    r10_head = {
-        "basket_lift_brands", "event_sessionization",
-        "gapfill_daily_forward_fill", "histogram_shard_merge",
-        "min_cost_supplier_per_part", "native_session_window",
-        "range_join_clicks_errors",
-    }
-    # round-15 queue: the r10 leftovers stay registered but out of
-    # this window
-    r10_deferred = {
-        "recursive_key_chain", "returned_items_report", "rfm_segment_counts",
-        "scd1_customer_upsert", "scd2_customer_upsert",
-        "similarity_topk_quantized", "stream_scd1_upsert",
-        "stream_session_window", "stream_window_counts",
-        "supplier_part_variety", "top_supplier_revenue",
-        "train_split_census", "value_histogram_fixed_buckets",
-        "value_outliers_zscore", "variant_props_rollup",
-        "volume_shipping",
-    }
-    w = set(names[:50])
-    assert head | r09_leftovers | r10_head <= w
-    assert r10_deferred & w == set()
-    assert r10_deferred <= set(names)  # deferred, not dropped
 
 
 def test_no_oracle_output_column_is_hugeint():
@@ -144,11 +83,11 @@ def test_no_oracle_output_column_is_hugeint():
 def test_every_contributor_module_is_wired():
     """Round-7 failure mode made impossible: a module under plans/ that
     defines contribute() but is never imported/invoked by
-    registry._populate() is dead code — its queries silently skip the
-    driver, tests, and bench (VERDICT r07 found exactly this, with two
-    broken queries hiding inside). Walk the package, find every module
-    whose AST defines a top-level `contribute`, and assert _populate()'s
-    source names each one."""
+    registry._populate() is dead code — its queries silently skip
+    queries(), the oracle parity sweep and the tests (VERDICT r07 found
+    exactly this, with two broken queries hiding inside). Walk the
+    package, find every module whose AST defines a top-level
+    `contribute`, and assert _populate()'s source names each one."""
     import building_permissions_etl_spark.plans as plans_pkg
     from building_permissions_etl_spark.plans import registry
 
@@ -175,5 +114,4 @@ def test_every_contributor_module_is_wired():
     unwired = sorted(set(contributors) - called)
     assert not unwired, (
         f"plans modules defining contribute() but never invoked by "
-        f"registry._populate(): {unwired} — wire them in and window "
-        f"their queries")
+        f"registry._populate(): {unwired} — wire them in")

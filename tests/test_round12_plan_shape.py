@@ -287,21 +287,3 @@ def test_schema_cache_misses_on_same_tick_different_size(spark, tmp_path):
     assert os.stat(p).st_mtime_ns == mt
     df2 = catalog.load_table(spark, "part", str(tmp_path))
     assert "extra" in df2.columns  # size component caught the rewrite
-
-
-def test_bench_tail_recovery_admits_only_known_queries():
-    """ADVICE r11: the truncated-tail recovery must not ingest
-    arbitrary '"key": float' pairs (stderr fragments, other JSON in
-    the tail) as phantom baseline queries."""
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
-    import bench
-
-    timings = {"flagship_monthly_pivot": 1.0, "pricing_summary": 2.0}
-    tail = ('... "loss": 0.125, "flagship_monthly_pivot": 1.375, '
-            '"sf": 0.1, "value": 164.6, "pricing_summary": 0.875 ...')
-    got = bench._recover_tail_pairs(tail, timings)
-    assert got == {"flagship_monthly_pivot": 1.375,
-                   "pricing_summary": 0.875}
