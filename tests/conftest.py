@@ -10,6 +10,13 @@ SF_DIR_MID = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
+    # Frames built from Python lists are split into default-parallelism
+    # slices, and every slice of such a frame costs one Python worker
+    # round trip each time it is computed (about 0.2 s on Python 3.11,
+    # where the worker re-reads pyspark.zip's directory per task). Test
+    # frames hold at most a few hundred rows, so two slices keep them
+    # multi-partition without paying for eight.
+    s = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8,
+                  extra_conf={"spark.default.parallelism": "2"})
     yield s
     s.stop()

@@ -82,9 +82,11 @@ def test_oracle_parity(spark, name):
 
 
 def test_every_query_runs(spark):
-    """Queries without an oracle still must run and return a DataFrame."""
-    for name, fn in QUERIES.items():
-        df = fn(spark, SF_DIR)
+    """Queries without an oracle still must run and return a DataFrame.
+    Every query with an oracle is already run and collected by
+    ``test_oracle_parity`` above, so it is not run a second time here."""
+    for name in sorted(set(QUERIES) - set(ORACLES)):
+        df = QUERIES[name](spark, SF_DIR)
         assert df.columns, name
         assert df.count() >= 0, name
 

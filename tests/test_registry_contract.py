@@ -4,6 +4,8 @@ import ast
 import pathlib
 import pkgutil
 
+import pytest
+
 from building_permissions_etl_spark.plans.registry import oracle_sql, queries
 
 # Queries registered WITHOUT a DuckDB oracle. Additions need the same
@@ -115,3 +117,26 @@ def test_every_contributor_module_is_wired():
     assert not unwired, (
         f"plans modules defining contribute() but never invoked by "
         f"registry._populate(): {unwired} — wire them in")
+
+
+def test_contributor_failure_leaves_registry_unfilled(monkeypatch):
+    """_populate() stages every registration and commits them in one
+    step: when a contributor raises, nothing is registered, so the next
+    call rebuilds the whole registry instead of serving the queries
+    staged before the failure."""
+    from building_permissions_etl_spark.plans import registry, round14_queries
+
+    names, oracles = set(queries()), oracle_sql()
+    monkeypatch.setattr(registry, "_REGISTRY", {})
+
+    def failing_contribute(stage):
+        raise RuntimeError("contributor failed")
+
+    with monkeypatch.context() as m:
+        # the last contributor, so every other module has staged first
+        m.setattr(round14_queries, "contribute", failing_contribute)
+        with pytest.raises(RuntimeError, match="contributor failed"):
+            queries()
+        assert registry._REGISTRY == {}
+    assert set(queries()) == names
+    assert oracle_sql() == oracles
