@@ -3,7 +3,7 @@
 ``entry(spark)`` — flagship smoke query at sf0.001.
 ``queries()`` — one named callable per implemented operator (SURVEY.md §2).
 ``oracle_sql()`` — DuckDB-runnable ANSI SQL oracle per query key; keys
-without an oracle get the driver's weaker rows-only check (documented
+without an oracle take a rows-only check plus unit tests (documented
 per-query in the registry module).
 
 The real registry lives in ``building_permissions_etl_spark.plans.registry``

@@ -7,9 +7,6 @@ joins (reference dags/aggregates_python_helpers.py keeps one version per
 dim row): a fact table reading an SCD2 dimension needs a point-in-time
 join, corpus dedup wants a keep-the-best survivor policy rather than
 min-id, and offline retrieval scores many queries per corpus scan.
-Registered after the round-5 driver window — they take their driver
-verdicts in the next rotation; until then the tri-scale local sweep and
-pytest cover them.
 """
 
 from __future__ import annotations

@@ -9,8 +9,7 @@ dags/aggregates_python_helpers.py never versions dimensions at all) and
 add the remaining classic analytic shapes (islands, running distinct,
 interval overlap, equi-depth) plus the nightly-ingest dedup pattern a
 training-data pipeline runs before appending a delta to a 100 TB
-corpus. Registered INSIDE the round-6 driver window, so each takes its
-driver verdict the same round it lands.
+corpus.
 """
 
 from __future__ import annotations

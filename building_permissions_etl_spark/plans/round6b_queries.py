@@ -9,9 +9,9 @@ selection — Xie et al. 2023) and warehouse hygiene (column profiling,
 fuzzy entity resolution, first-digit fraud screening). The PageRank
 entry is the one genuinely ITERATIVE dataflow shape the registry lacked
 with an oracle: fixed-point integer arithmetic makes six synchronous
-iterations bit-identical across engines, so the driver hash-compares an
+iterations bit-identical across engines, so the DuckDB oracle checks an
 iterative algorithm end-to-end instead of settling for a rows-only
-check. All six are registered inside the round-6 driver window.
+check.
 """
 
 from __future__ import annotations

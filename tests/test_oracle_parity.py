@@ -82,11 +82,12 @@ def test_oracle_parity(spark, name):
 
 
 def test_every_query_runs(spark):
-    """Queries without an oracle still must run and return a DataFrame.
-    Every query with an oracle is already run and collected by
-    ``test_oracle_parity`` above, so it is not run a second time here."""
-    for name in sorted(set(QUERIES) - set(ORACLES)):
-        df = QUERIES[name](spark, SF_DIR)
+    """Every query runs and counts. The queries without an oracle are
+    run only here; the oracle-backed ones run a second time in the same
+    session, and ``count()`` is planned apart from ``collect()`` (Spark
+    prunes the columns down to the aggregate)."""
+    for name, fn in QUERIES.items():
+        df = fn(spark, SF_DIR)
         assert df.columns, name
         assert df.count() >= 0, name
 

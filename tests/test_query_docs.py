@@ -1,11 +1,14 @@
 """QUERIES.md is generated from the registry and must stay current.
 
 Spark-free: rendering imports the contributor modules and records their
-registrations; no session starts. A dropped or renamed query, or a lost
-oracle, changes the rendered text and fails here.
+registrations; no session starts. Any change to the inventory needs
+``QUERIES.md`` regenerated; dropping or renaming a query, or losing an
+oracle, also needs the inventory digest below updated on purpose.
 """
 
+import hashlib
 import importlib.util
+import json
 import pathlib
 import re
 
@@ -31,3 +34,14 @@ def test_queries_md_is_current():
     assert set(rows) == set(queries())
     assert {n for n, check in rows.items()
             if check == "DuckDB oracle"} == set(oracle_sql())
+
+
+def test_inventory_is_pinned():
+    """The 218 query names and the 212 with an oracle. Regenerating
+    ``QUERIES.md`` does not pass this, so a query is never dropped by
+    accident; when the inventory changes on purpose, update the digest."""
+    names, oracles = sorted(queries()), sorted(oracle_sql())
+    assert (len(names), len(oracles)) == (218, 212)
+    digest = hashlib.sha256(json.dumps([names, oracles]).encode()).hexdigest()
+    assert digest == (
+        "08c14b0e3b3ccd038cc286ceced889d6497656a40e75f06cab8fbb52ee5c8b6b")

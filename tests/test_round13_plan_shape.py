@@ -22,6 +22,7 @@ import re
 from pyspark.sql import functions as F
 
 from building_permissions_etl_spark.plans.registry import oracle_sql, queries
+from tests.plan_nodes import iter_plan_nodes
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -34,27 +35,14 @@ def _static_plan(df) -> str:
 
 def _scan_metrics(df) -> dict:
     """Metrics of the (single) scan node in a df's EXECUTED plan —
-    call after an action so the values belong to the plan that ran.
-    Descends through AQE wrappers (AdaptiveSparkPlan / QueryStage)
-    via their inner-plan accessors as well as ordinary children."""
+    call after an action so the values belong to the plan that ran."""
     hits = []
-
-    def walk(node):
+    for node in iter_plan_nodes(df):
         if "Scan" in node.nodeName():
             it = node.metrics().iterator()
             while it.hasNext():
                 kv = it.next()
                 hits.append((kv._1(), kv._2().value()))
-        for getter in ("executedPlan", "plan"):
-            try:
-                walk(getattr(node, getter)())
-            except Exception:
-                pass
-        ch = node.children()
-        for i in range(ch.size()):
-            walk(ch.apply(i))
-
-    walk(df._jdf.queryExecution().executedPlan())
     return dict(hits)
 
 
@@ -63,9 +51,8 @@ def test_bloom_union_oracle_text_is_stable():
     `bloom_incremental_union`'s oracle is byte-stable across the
     round-12 hoist — make the claim mechanical. A drift in the
     maintenance-module geometry/affine constants (or in the emitted
-    SQL text) now fails here instead of silently rewriting a
-    windowed-out oracle; if this fires intentionally, re-window the
-    query (dead-evidence rule) and update the digest."""
+    SQL text) now fails here instead of silently rewriting the
+    oracle; if this fires intentionally, update the digest."""
     sql = oracle_sql()["bloom_incremental_union"]
     assert hashlib.sha256(sql.encode()).hexdigest() == (
         "2f6bb7bd7c884ff482b3e82834eafaa1cf6a37897c58b8f7708368095442fd70")

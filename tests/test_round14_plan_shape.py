@@ -33,10 +33,9 @@ Q = queries()
 
 def test_zorder_merge_oracle_stable_across_quantizer_fold():
     """Round-14 fold of round9_queries' inline quantizers onto the
-    hoisted ZQ_* names (sanctioned by zorder_extent_merge re-entering
-    the driver window): the emitted oracle SQL must be byte-identical
-    to the pre-fold text. If this fires intentionally, re-window the
-    query and update the digest (dead-evidence rule)."""
+    hoisted ZQ_* names: the emitted oracle SQL must be byte-identical
+    to the pre-fold text. If this fires intentionally, update the
+    digest."""
     sql = oracle_sql()["zorder_extent_merge"]
     assert hashlib.sha256(sql.encode()).hexdigest() == (
         "f6a5d3558df568e0e131f1a7214dd59743a57c30b83ba70d60b1e88fe5959871")

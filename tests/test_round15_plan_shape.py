@@ -11,10 +11,10 @@ from __future__ import annotations
 
 import json
 
-from py4j.protocol import Py4JError
 from pyspark.sql import functions as F
 
 from building_permissions_etl_spark.operators import dedup as D
+from tests.plan_nodes import iter_plan_nodes
 
 
 def _banded(spark):
@@ -62,27 +62,15 @@ def test_bucket_pairs_score_values_match_wide_path(spark):
 
 def _generate_fields(df) -> set[str]:
     """Struct field names in the output attributes of the Generate
-    node(s) of df's executed plan. Descends through AQE wrappers via
-    their inner-plan accessors as well as ordinary children."""
+    node(s) of df's executed plan."""
     fields: set[str] = set()
-
-    def walk(node):
+    for node in iter_plan_nodes(df):
         if node.nodeName() == "Generate":
             attrs = node.output()
             for i in range(attrs.size()):
                 dtype = json.loads(attrs.apply(i).dataType().json())
                 if isinstance(dtype, dict) and dtype["type"] == "struct":
                     fields.update(f["name"] for f in dtype["fields"])
-        for getter in ("executedPlan", "plan"):
-            try:
-                walk(getattr(node, getter)())
-            except Py4JError:  # node has no such accessor
-                pass
-        ch = node.children()
-        for i in range(ch.size()):
-            walk(ch.apply(i))
-
-    walk(df._jdf.queryExecution().executedPlan())
     return fields
 
 
