@@ -51,13 +51,6 @@ _SCHEMA_CACHE_MAX = 256
 _SCHEMA_CACHE: dict = {}  # insertion order IS recency order (hits re-insert)
 
 
-def _mtime(path: str) -> int:
-    try:
-        return os.stat(path).st_mtime_ns
-    except OSError:
-        return -1
-
-
 def _stat_key(path: str) -> tuple[int, int]:
     """(mtime_ns, total_bytes) of a path. For a parquet DIRECTORY the
     mtime is the directory's own (changes when part files are added or

@@ -1,4 +1,4 @@
-"""String/normalization helpers (SURVEY.md §2.8 C1-C3, C12-C14, C21; the
+"""String/normalization helpers (SURVEY.md §2.8 C2, C3, C12, C21; the
 C15 null/'nan' test is SQL text in ``operators/terc.py``).
 
 Every row-level transform is a native Column expression so it stays inside
@@ -10,8 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from building_permissions_etl_spark.schemas import VOIVODESHIPS
 
 
 def canonicalize_numeric_string(col: Column) -> Column:
@@ -28,15 +26,6 @@ def canonicalize_numeric_string(col: Column) -> Column:
 def zero_pad_terc(col: Column) -> Column:
     """C2: 6-digit numeric terc → prepend '0' (helpers:288-289)."""
     return F.when(col.rlike(r"^\d{6}$"), F.concat(F.lit("0"), col)).otherwise(col)
-
-
-def voivodeship_name(prefix2: Column, default: str = "Unknown") -> Column:
-    """C14: 2-char terc prefix → voivodeship name with default (helpers:242-259)."""
-    expr = None
-    for code, name in VOIVODESHIPS.items():
-        cond = prefix2 == code
-        expr = F.when(cond, name) if expr is None else expr.when(cond, name)
-    return expr.otherwise(F.lit(default))
 
 
 def ci_contains(haystack: Column, needle: Column) -> Column:

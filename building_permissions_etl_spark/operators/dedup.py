@@ -22,7 +22,6 @@ array_min / xxhash64 / bitwise ops) — no Python in the hot path.
 
 from __future__ import annotations
 
-import os as _os
 import threading as _threading
 from collections.abc import Callable
 
@@ -65,9 +64,9 @@ def _eager_final_release_ok(df: DataFrame) -> bool:
 # Final-generation checkpoint releases retained on a CLUSTER master,
 # where eager release is unsafe (the cached result's recompute path runs
 # through the checkpoint — see _eager_final_release_ok). One entry per
-# connected-components call; empty on a local master. GROWTH CONTRACT:
-# on a cluster this list grows by exactly one closure (one live
-# checkpoint generation + one py4j ref) per connected-components call
+# distributed connected-components call; empty on a local master. GROWTH
+# CONTRACT: on a cluster this list grows by exactly one closure (one live
+# checkpoint generation + one py4j ref) per distributed call
 # until release_retained_checkpoints() is invoked — long-lived cluster
 # drivers running many graphs MUST call it between batches or accept
 # one retained generation per call. Appends and drains are serialized
@@ -80,8 +79,8 @@ _RETAINED_FINAL_RELEASES: list = []
 
 def release_retained_checkpoints() -> int:
     """Free the final-generation localCheckpoint blocks retained by
-    prior ``connected_components`` / ``connected_components_star`` calls
-    on a cluster master. Call once the returned label frames have been
+    prior distributed ``connected_components`` calls on a cluster
+    master. Call once the returned label frames have been
     fully consumed (or re-materialized elsewhere): a released
     checkpoint cannot back recompute, so cached labels that lose blocks
     to executor failure afterwards would error instead of recovering.
@@ -919,41 +918,41 @@ def ngram_jaccard_pairs_auto(
     return ngram_jaccard_pairs(df, text_col, id_col, block_col, n, min_jaccard)
 
 
-# Small-graph short-circuit for the connected-components operators
-# (guide §1.2: fix the distributed algorithm first — running 5-10
-# distributed rounds of ~6 shuffles each over a few hundred edges is
-# pure scheduling overhead). Near-dup pair graphs are usually TINY
+# Connected components: ONE algorithm, large-star/small-star (Kiveris et
+# al., "Connected Components in MapReduce and Beyond", SoCC 2014), with a
+# size-based driver shortcut. Near-dup pair graphs are usually TINY
 # relative to the corpus (pairs are the near-duplicates, bounded by
-# banding/blocking caps), so both CC entry points first probe the edge
-# list with limit(cap+1): if the whole graph fits under the cap it is
-# labeled on the driver with union-find (attach-larger-root-to-smaller,
-# so every root IS its component minimum — bit-identical labels to the
-# iterative loops) in O(E α(E)); otherwise the distributed loop runs
-# unchanged. Measured at sf0.1: the star survivors query drops 18 s →
-# ~5 s with identical rows.
+# banding/blocking caps), so the edge list is first probed with
+# limit(cap+1): if the whole graph fits under the cap it is labeled on
+# the driver with union-find (attach-larger-root-to-smaller, so every
+# root IS its component minimum — bit-identical labels to the star
+# loop) in O(E α(E)); running distributed rounds of several shuffles
+# each over a few hundred edges is pure scheduling overhead.
 #
-# This is the same fits-in-one-place reasoning as a broadcast join
-# (guide §3.1), with the same bound discipline: the probe collects at
-# most cap+1 edge rows (default 100k ≈ a few MB — far under
-# spark.driver.maxResultSize), and past the cap the probe's partial
-# work is bounded by one early-terminated CollectLimit pass over the
-# pair plan. Pipelines that KNOW the graph is huge can skip the probe
-# with local_edge_cap=0 (or the env var).
-CC_LOCAL_EDGE_CAP = int(_os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGE_CAP",
-                                        "100000"))
+# This is the same fits-in-one-place reasoning as a broadcast join, with
+# the same bound discipline: the probe collects at most cap+1 edge rows
+# (100k ≈ a few MB — far under spark.driver.maxResultSize), and past the
+# cap the probe's partial work is bounded by one early-terminated
+# CollectLimit pass over the pair plan.
+CC_LOCAL_EDGE_CAP = 100_000
+
+# Round guard of the star loop. It converges in O(log² n) rounds on any
+# topology (a 300-node chain takes 10), so reaching 64 means the edge
+# set failed to stabilize — an error, never a silently partial labeling.
+_CC_MAX_ROUNDS = 64
 
 
-def _cc_small_graph_labels(pairs: DataFrame, id_a: str, id_b: str,
-                           cap: int) -> DataFrame | None:
+def _cc_small_graph_labels(pairs: DataFrame, id_a: str,
+                           id_b: str) -> DataFrame | None:
     """(id, label) via driver union-find iff the edge list fits under
-    ``cap`` rows, else None. Replicates the distributed operators'
-    exact semantics: only ids appearing in ``pairs`` are returned,
-    label = min id reachable; a NULL endpoint is a node labeled NULL
-    and never merges anything (null join keys match nothing in the
-    loops); self-loops carry no connectivity."""
+    ``CC_LOCAL_EDGE_CAP`` rows, else None. Replicates the star loop's exact
+    semantics: only ids appearing in ``pairs`` are returned, label =
+    min id reachable; a NULL endpoint is a node labeled NULL and never
+    merges anything (null join keys match nothing in the loop);
+    self-loops carry no connectivity."""
     proj = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-    head = proj.limit(cap + 1).collect()
-    if len(head) > cap:
+    head = proj.limit(CC_LOCAL_EDGE_CAP + 1).collect()
+    if len(head) > CC_LOCAL_EDGE_CAP:
         return None
     parent: dict = {}
 
@@ -999,143 +998,31 @@ def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iters: int = 20,
-    local_edge_cap: int | None = None,
 ) -> DataFrame:
     """Cluster near-dup pairs into components: (id, label) with label =
-    min id reachable. Iterative min-label propagation — each round every
-    node takes the min of its own and its neighbors' labels; converges in
-    O(component diameter) rounds, and near-dup clusters are shallow
-    (pairs all share bands/blocks), so a handful of joins suffice. The
-    driver checks convergence per round (bounded small action). At larger
-    diameters the large-star/small-star variant (Kiveris et al., SoCC'14)
-    drops in behind the same signature.
+    min id reachable. Only ids that appear in ``pairs`` are returned —
+    singleton documents never enter the pair graph and survive dedup by
+    construction.
 
-    Only ids that appear in ``pairs`` are returned — singleton documents
-    never enter the pair graph and survive dedup by construction.
-
-    Memory discipline: each round fully materializes the new labels
-    (count), then unpersists the superseded generation — at most the
-    edge list plus ONE labels generation stay cached at any time (the
-    round-1 form leaked up to ``max_iters`` cached frames). Every 5
-    rounds the labels are localCheckpoint'ed so the join lineage cannot
-    grow unboundedly (recompute-from-scratch on executor loss would be
-    O(rounds²) otherwise). The edge cache is released before returning,
-    and checkpoint RDD blocks are freed as soon as they are superseded
-    (``_local_checkpoint_tracked``). Checkpoint handling is per-result:
-    a checkpoint-backed final frame is re-homed into a plain cache so
-    its generation can be freed before returning — no module state, no
-    deferral keyed on unrelated future calls. On a local master the
-    call leaves ZERO checkpoint residue; on a cluster master the final
-    generation stays alive (see ``_eager_final_release_ok`` for why).
-
-    Graphs whose edge list fits under ``local_edge_cap`` (default
-    ``CC_LOCAL_EDGE_CAP``; 0 disables) short-circuit to a driver
-    union-find with bit-identical labels — see ``_cc_small_graph_labels``.
+    Graphs whose edge list fits under ``CC_LOCAL_EDGE_CAP`` rows are
+    labeled on the driver (``_cc_small_graph_labels``); larger ones run
+    the distributed large-star/small-star loop (``_star_components``).
+    Both produce identical labels.
     """
-    cap = CC_LOCAL_EDGE_CAP if local_edge_cap is None else local_edge_cap
-    if cap:
-        local = _cc_small_graph_labels(pairs, id_a, id_b, cap)
-        if local is not None:
-            return local
-    edges = pairs.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-    )
-    sym = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    sym = sym.repartition("src").cache()
-    labels = (
-        sym.select(F.col("src").alias("id")).distinct()
-        .withColumn("label", F.col("id"))
-    )
-    prev_cached = None
-    ck_release = None           # release handle of the live checkpoint
-    labels_is_ckpt = False      # does `labels` ITSELF hold checkpoint blocks?
-    try:
-        for i in range(max_iters):
-            nbr_min = (
-                sym.join(labels, sym.dst == labels.id)
-                .groupBy("src").agg(F.min("label").alias("nbr_label"))
-            )
-            new_labels = (
-                labels.join(nbr_min, labels.id == nbr_min.src, "left")
-                .select(
-                    "id",
-                    F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias("label"),
-                )
-                .cache()
-            )
-            # materialize ALL partitions before dropping the parent —
-            # the limit(1) change-probe alone may leave partitions
-            # uncomputed, and those would recompute through the
-            # unpersisted lineage
-            new_labels.count()
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "id")
-                .filter(F.col("n.label") != F.col("o.label"))
-                .limit(1).count()
-            )
-            if prev_cached is not None:
-                prev_cached.unpersist()
-            prev_cached = new_labels
-            labels, labels_is_ckpt = new_labels, False
-            if changed == 0:
-                break
-            if (i + 1) % 5 == 0:
-                labels, new_release = _local_checkpoint_tracked(labels)
-                labels_is_ckpt = True
-                if ck_release is not None:
-                    ck_release()    # superseded by the generation just cut
-                ck_release = new_release
-                prev_cached.unpersist()
-                prev_cached = None
-    except BaseException:
-        # nothing is returned on this path, so a live checkpoint has no
-        # possible consumer — free it immediately
-        if ck_release is not None:
-            ck_release()
-        raise
-    finally:
-        sym.unpersist()
-    if ck_release is not None:
-        if labels_is_ckpt:
-            # the returned frame itself holds checkpoint blocks (only
-            # reachable via max_iters exhausting on a checkpoint round):
-            # re-home it into a plain CacheManager-visible cache so the
-            # checkpoint generation is releasable per-result, now
-            labels = labels.cache()
-            labels.count()
-        # returned labels are a fully-materialized plain cache; the
-        # checkpoint behind their lineage is dead weight — free it when
-        # safe (always on local; on a cluster it stays as the recompute
-        # path until the caller, done consuming the result, frees it via
-        # release_retained_checkpoints())
-        if _eager_final_release_ok(labels):
-            ck_release()
-        else:
-            with _RETAINED_LOCK:
-                _RETAINED_FINAL_RELEASES.append(ck_release)
-    return labels
+    local = _cc_small_graph_labels(pairs, id_a, id_b)
+    if local is not None:
+        return local
+    return _star_components(pairs, id_a, id_b)
 
 
-def connected_components_star(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iters: int = 25,
-    local_edge_cap: int | None = None,
-) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC 2014 —
-    public algorithm). Same contract as ``connected_components``: (id,
-    label) with label = min id reachable, only ids appearing in ``pairs``.
-
-    Min-label propagation converges in O(diameter) rounds — fine for
-    near-dup clusters (shallow by construction), pathological for long
-    chains. The star rewrites reattach whole neighborhoods to their
-    neighborhood minimum each round, halving depth: O(log² n) rounds on
-    ANY topology, each round two groupBy+join passes over the current
-    edge set, whose size never grows beyond the input edge count.
+def _star_components(pairs: DataFrame, id_a: str = "id_a",
+                     id_b: str = "id_b") -> DataFrame:
+    """Distributed half of ``connected_components``: alternating
+    large-star/small-star rounds (Kiveris et al., SoCC 2014). Each round
+    reattaches whole neighborhoods to their neighborhood minimum,
+    halving depth: O(log² n) rounds on ANY topology, each round two
+    groupBy+join passes over the current edge set, whose size never
+    grows beyond the input edge count.
 
       * large-star: every node u sends its strictly-larger neighbors to
         m = min(Γ(u) ∪ {u})  → edges (v, m) for v ∈ Γ(u), v > u;
@@ -1143,46 +1030,32 @@ def connected_components_star(
         its smaller neighbors (and itself) to m = min(Γ≤(u) ∪ {u}).
 
     Convergence is detected by edge-set stability (count + hash-sum in
-    ONE aggregate, which also materializes the round's cache). Memory
-    discipline: each round's edge set is cached and the superseded
-    generation unpersisted — at most two generations materialized at
-    once. The lineage is cut with localCheckpoint every 3 rounds, more
-    aggressively than the propagation loop's every-5: the star rewrite
-    references the prior plan ~5 times per round and Catalyst's tree
-    traversals revisit shared subtrees, so an uncut plan's analysis
-    cost is exponential in rounds (measured: heap OOM at ~7 rounds on a
-    300-node chain; depth ≤ 3 keeps the tree ≤ 5³ node-visits).
-    Checkpoint blocks are NOT unpersistable through the DataFrame API
-    (RDD-level persist, invisible to the CacheManager), so each
-    generation's blocks are freed directly through the RDD handle the
-    moment a newer generation is materialized
-    (``_local_checkpoint_tracked``); after the final labels are cached
-    and counted, the last checkpoint is freed too — on a local master
-    this operator leaves ZERO checkpoint residue (on a cluster master
-    the final generation stays alive as the cached labels' recompute
-    path; see ``_eager_final_release_ok``). Exception paths free the
-    live checkpoint immediately — nothing is returned, so it can have
-    no consumer.
+    ONE aggregate); a loop that reaches ``_CC_MAX_ROUNDS`` raises.
 
-    Graphs whose edge list fits under ``local_edge_cap`` (default
-    ``CC_LOCAL_EDGE_CAP``; 0 disables) short-circuit to a driver
-    union-find with bit-identical labels — see ``_cc_small_graph_labels``.
+    Bounded plans: every round's edge set is cut with an eager
+    localCheckpoint, so each round is planned over a leaf of constant
+    size. (The rewrite references the prior plan ~5 times per round and
+    Catalyst's tree traversals revisit shared subtrees, so an uncut plan's
+    analysis cost is exponential in rounds.) Checkpoint blocks are NOT
+    unpersistable through the DataFrame API (RDD-level persist, invisible
+    to the CacheManager), so each generation is freed through its RDD
+    handle (``_local_checkpoint_tracked``) as soon as the next one is
+    materialized. After the final labels are cached and counted the last
+    generation is freed too: on a local master this leaves ZERO
+    checkpoint residue; on a cluster master it stays alive as the cached
+    labels' recompute path (see ``_eager_final_release_ok``). Exception
+    paths free the live checkpoint immediately — nothing is returned, so
+    it can have no consumer.
     """
-    cap = CC_LOCAL_EDGE_CAP if local_edge_cap is None else local_edge_cap
-    if cap:
-        local = _cc_small_graph_labels(pairs, id_a, id_b, cap)
-        if local is not None:
-            return local
     raw = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-    ids = raw.select(F.explode(F.array("u", "v")).alias("id")).distinct().cache()
     # big→small canonical orientation; self-loops carry no connectivity
     # (their ids still get labels via the `ids` union below)
-    edges = (
+    edges, ck_release = _local_checkpoint_tracked(
         raw.filter(F.col("u") != F.col("v"))
         .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
         .distinct()
-        .cache()
     )
+    ids = raw.select(F.explode(F.array("u", "v")).alias("id")).distinct().cache()
 
     def _signature(e: DataFrame) -> tuple:
         row = e.agg(
@@ -1191,11 +1064,9 @@ def connected_components_star(
         ).first()
         return (row["n"], row["h"])
 
-    sig = _signature(edges)
-    edges_is_ckpt = False
-    ck_release = None
     try:
-        for i in range(max_iters):
+        sig = _signature(edges)
+        for _ in range(_CC_MAX_ROUNDS):
             if sig[0] == 0:
                 break
             sym = edges.union(
@@ -1218,24 +1089,19 @@ def connected_components_star(
                 .union(smins.select("u", F.col("m").alias("v")))
                 .filter(F.col("u") != F.col("v"))
                 .distinct()
-                .cache()
             )
-            new_sig = _signature(small)  # materializes the cache
-            if not edges_is_ckpt:
-                edges.unpersist()
-            elif ck_release is not None:
-                ck_release()    # this round's cache supersedes the ckpt
-                ck_release = None
-            edges, edges_is_ckpt = small, False
-            if (i + 1) % 3 == 0:
-                # cut lineage before the plan tree deepens past 3 rounds;
-                # the plain cache is then redundant with the checkpoint
-                edges, ck_release = _local_checkpoint_tracked(small)
-                edges_is_ckpt = True
-                small.unpersist()
+            superseded = ck_release
+            edges, ck_release = _local_checkpoint_tracked(small)
+            superseded()
+            new_sig = _signature(edges)
             if new_sig == sig:
                 break
             sig = new_sig
+        else:
+            raise RuntimeError(
+                f"connected components did not converge in "
+                f"{_CC_MAX_ROUNDS} large-star/small-star rounds"
+            )
         children = edges.select(F.col("u").alias("id"), F.col("v").alias("label"))
         roots = ids.join(children, "id", "left_anti").withColumn(
             "label", F.col("id")
@@ -1243,24 +1109,21 @@ def connected_components_star(
         labels = children.union(roots).cache()
         labels.count()
         # labels are now fully materialized in their own (disk-spilling)
-        # cache — the last edge generation, checkpoint or not, is dead
-        # weight and releasable (eagerly on local; on a cluster master
-        # it stays as the cached labels' recompute path until the
-        # caller frees it via release_retained_checkpoints()).
-        if ck_release is not None:
-            if _eager_final_release_ok(labels):
-                ck_release()
-            else:
-                with _RETAINED_LOCK:
-                    _RETAINED_FINAL_RELEASES.append(ck_release)
-            ck_release = None
+        # cache — the last edge generation is dead weight and releasable
+        # (eagerly on local; on a cluster master it stays as the cached
+        # labels' recompute path until the caller frees it via
+        # release_retained_checkpoints()).
+        if _eager_final_release_ok(labels):
+            ck_release()
+        else:
+            with _RETAINED_LOCK:
+                _RETAINED_FINAL_RELEASES.append(ck_release)
+        ck_release = None
     finally:
         if ck_release is not None:
             # exception path: nothing is returned, so the live
             # checkpoint has no possible consumer — free it immediately
             ck_release()
-        if not edges_is_ckpt:
-            edges.unpersist()   # no-op when the body already released it
         ids.unpersist()
     return labels
 
@@ -1268,19 +1131,10 @@ def connected_components_star(
 def dedup_survivors(
     df: DataFrame, pairs: DataFrame, id_col: str,
     id_a: str = "id_a", id_b: str = "id_b",
-    algorithm: str = "propagation",
 ) -> DataFrame:
     """Keep one row per near-dup cluster (the min id) plus every row not
-    in any pair. The standard pairs → components → survivors tail.
-    ``algorithm``: "propagation" (min-label, O(diameter) rounds — the
-    default for shallow near-dup graphs) or "star" (large-star/small-star,
-    O(log² n) rounds on any topology)."""
-    if algorithm not in ("propagation", "star"):
-        raise ValueError(
-            f"algorithm must be 'propagation' or 'star', got {algorithm!r}"
-        )
-    cc = connected_components if algorithm == "propagation" else connected_components_star
-    comp = cc(pairs, id_a, id_b)
+    in any pair. The standard pairs → components → survivors tail."""
+    comp = connected_components(pairs, id_a, id_b)
     losers = comp.filter(F.col("id") != F.col("label")).select("id")
     return df.join(
         losers, df[id_col] == losers.id, "left_anti"
@@ -1327,7 +1181,6 @@ def dedup_survivors_by(
     order_by,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    algorithm: str = "propagation",
 ) -> DataFrame:
     """Keep the BEST row per near-dup cluster by an explicit ordering —
     the survivor policy real corpus dedup wants (keep the longest /
@@ -1344,12 +1197,8 @@ def dedup_survivors_by(
     partitions, so no skew; a 100 TB corpus pays exactly two exchanges
     beyond the pair generation.
     """
-    if algorithm not in ("propagation", "star"):
-        raise ValueError(
-            f"algorithm must be 'propagation' or 'star', got {algorithm!r}"
-        )
-    cc = connected_components if algorithm == "propagation" else connected_components_star
-    comp = cc(pairs, id_a, id_b).withColumnRenamed("id", "__cc_id")
+    comp = connected_components(pairs, id_a, id_b).withColumnRenamed(
+        "id", "__cc_id")
     labeled = df.join(comp, df[id_col] == F.col("__cc_id"), "left")
     label = F.coalesce(F.col("label"), df[id_col])
     w = Window.partitionBy(label).orderBy(*order_by, F.col(id_col).asc())

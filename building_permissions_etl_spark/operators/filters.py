@@ -1,4 +1,4 @@
-"""Filter/window operators (SURVEY.md §2.2 F1-F7).
+"""Filter/window operators (SURVEY.md §2.2 F1, F2, F4, F6, F7).
 
 All are plain ``df.filter`` on native expressions so Catalyst pushes them
 into the parquet scan (``PushedFilters``) and prunes month partitions —
@@ -26,26 +26,9 @@ def upper_bound_only(df: DataFrame, col: str, hi) -> DataFrame:
     return df.filter(F.col(col) < F.lit(hi))
 
 
-def drop_null_event_time(df: DataFrame, col: str) -> DataFrame:
-    """F3: ``dropna(subset=[event_time])`` (helpers:145)."""
-    return df.na.drop(subset=[col])
-
-
 def not_in_set(df: DataFrame, col: str, values: list[str]) -> DataFrame:
     """F4: remove sentinel-class rows (helpers:221-223)."""
     return df.filter(~F.col(col).isin(values))
-
-
-def months_lookback(df: DataFrame, col: str, anchor, months: int) -> DataFrame:
-    """F5: ``>= anchor - n months`` (helpers:352-354). ``anchor`` is a literal
-    (the logical date) — never wall-clock. INTERVAL arithmetic (not
-    ``add_months``, which coerces through DATE and silently drops the
-    anchor's time-of-day) mirrors the reference's ``relativedelta``:
-    time preserved, month-end clamped."""
-    return df.filter(
-        F.col(col) >= F.lit(anchor).cast("timestamp")
-        - F.expr(f"INTERVAL {int(months)} MONTH")
-    )
 
 
 def days_lookback_expr(col: str, max_col: str, days: int) -> Column:

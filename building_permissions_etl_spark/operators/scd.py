@@ -10,8 +10,9 @@ writes it back with the partitioned sink (overwrite), which is also the
 only transactional choice on immutable files.
 
 Scale shape: the update batch is almost always dims-sized (≪ fact) —
-both operators take it as a separate frame so Spark can broadcast it;
-the current table is scanned ONCE; change detection is a null-safe
+both operators take it as a separate frame (SCD1 broadcasts it; SCD2
+needs a full outer join, which Spark cannot broadcast, and shuffles on
+the key); the current table is scanned ONCE; change detection is a null-safe
 column comparison (eqNullSafe), never a row-serialized hash. With a
 table-format sink (Iceberg/Delta) the same frames feed MERGE INTO
 directly; the state computation here is the engine-portable core.
@@ -121,9 +122,11 @@ def scd2_upsert(
     batch's tracked attributes (non-tracked NULL) — it is NOT silently
     dropped. The batch must have at most one row per key (validated).
 
-    One scan of ``current``, one broadcast of the batch; the three
-    output legs (pass-through, closed old versions, opened new versions)
-    are unions of the same join, not re-scans.
+    One scan of ``current`` and one join, with no union legs: every
+    output row comes from one ``inline`` over the joined rows. The join
+    is a shuffle on the key, so the output has the session's
+    (AQE-coalesced) shuffle partition count, and applying the merge to
+    its own output does not multiply partitions.
     """
     upd = updates.select(key, *tracked)
     _reject_duplicate_keys(upd, key)
@@ -171,65 +174,47 @@ def scd2_upsert(
     attr_cols = [c for c in current.columns
                  if c not in (key, valid_from, valid_to)]
 
-    open_rows = current.filter(F.col(valid_to).isNull())
-    closed_rows = current.filter(F.col(valid_to).isNotNull())
+    # ONE full outer join of the whole table with the batch, matching
+    # only OPEN versions (a closed-only key re-activates like a new key):
+    # closed and untouched open rows come out with no batch side, batch
+    # keys with no open version come out with no current side. Batch
+    # membership is a dedicated flag column, not attribute-null probing
+    # — tracked attributes may legitimately be NULL.
+    joined = current.withColumn("__in_cur", F.lit(True)).alias("cur").join(
+        upd.withColumn("__in_batch", F.lit(True)).alias("upd"),
+        (F.col(f"cur.{key}") == F.col(f"upd.{key}"))
+        & F.col(f"cur.{valid_to}").isNull(),
+        "full_outer",
+    )
+    in_cur = F.col("__in_cur").isNotNull()
+    changed = in_cur & F.col("__in_batch").isNotNull() & _any_tracked_differs(tracked)
 
-    # Batch membership is a dedicated flag column, not attribute-null
-    # probing — tracked attributes may legitimately be NULL.
-    flagged = (
-        open_rows.alias("cur")
-        .join(
-            F.broadcast(upd.withColumn("__in_batch", F.lit(True))).alias("upd"),
-            on=key, how="left",
+    def version(attrs, vf: Column, vt: Column) -> Column:
+        return F.struct(
+            F.when(in_cur, F.col(f"cur.{key}"))
+            .otherwise(F.col(f"upd.{key}")).alias(key),
+            *[a.alias(c) for a, c in zip(attrs, attr_cols)],
+            vf.alias(valid_from), vt.alias(valid_to),
         )
-        .withColumn(
-            "__changed",
-            F.coalesce(F.col("__in_batch"), F.lit(False))
-            & _any_tracked_differs(tracked),
-        )
-    )
 
-    unchanged_open = flagged.filter(~F.col("__changed")).select(
-        F.col(key), *[F.col(f"cur.{c}").alias(c) for c in attr_cols],
-        F.col(f"cur.{valid_from}").alias(valid_from),
-        F.col(f"cur.{valid_to}").alias(valid_to),
+    old_attrs = [F.col(f"cur.{c}") for c in attr_cols]
+    kept = version(old_attrs, F.col(f"cur.{valid_from}"), F.col(f"cur.{valid_to}"))
+    closed = version(old_attrs, F.col(f"cur.{valid_from}"), eff)
+    # a brand-new key has no current side, so its non-tracked columns
+    # read NULL here, as for any fresh insert
+    opened = version(
+        [F.col(f"upd.{c}") if c in tracked else F.col(f"cur.{c}")
+         for c in attr_cols],
+        eff, F.lit(None).cast(dict(current.dtypes)[valid_to]),
     )
-    closed_old = flagged.filter(F.col("__changed")).select(
-        F.col(key), *[F.col(f"cur.{c}").alias(c) for c in attr_cols],
-        F.col(f"cur.{valid_from}").alias(valid_from),
-        eff.alias(valid_to),
-    )
-    opened_new = flagged.filter(F.col("__changed")).select(
-        F.col(key),
-        *[
-            (F.col(f"upd.{c}") if c in tracked else F.col(f"cur.{c}"))
-            .alias(c)
-            for c in attr_cols
-        ],
-        eff.alias(valid_from),
-        F.lit(None).cast(dict(current.dtypes)[valid_to]).alias(valid_to),
-    )
-    # Insert leg anti-joins against keys WITH AN OPEN VERSION (not all
-    # keys): an update for a closed-only key must open a new version
-    # (re-activation), not vanish between the legs.
-    brand_new = (
-        upd.alias("upd")
-        .join(open_rows.select(key).distinct(), on=key, how="left_anti")
-        .select(
-            F.col(key),
-            *[
-                (F.col(c) if c in tracked else F.lit(None)).alias(c)
-                for c in attr_cols
-            ],
-            eff.alias(valid_from),
-            F.lit(None).cast(dict(current.dtypes)[valid_to]).alias(valid_to),
-        )
-    )
-    out = closed_rows.select(
-        key, *attr_cols, valid_from, valid_to
-    ).unionByName(unchanged_open).unionByName(closed_old).unionByName(
-        opened_new).unionByName(brand_new)
-    return out
+    # one or two output rows per joined row: the closed old and the
+    # opened new version for a changed key, a fresh version for a new
+    # key, the row itself otherwise
+    return joined.select(F.inline(
+        F.when(~in_cur, F.array(opened))
+        .when(changed, F.array(closed, opened))
+        .otherwise(F.array(kept))
+    ))
 
 
 def point_in_time_join(

@@ -266,29 +266,24 @@ def contribute(register) -> None:
     # Pairs → connected components → survivors: the full dedup tail.
     # Pair source is the SQL-expressible n-gram Jaccard blocking, so the
     # oracle can rebuild the clusters with a recursive transitive closure.
-    # Registered twice — once per clustering algorithm (min-label
-    # propagation and large-star/small-star), SAME oracle: the driver's
-    # hash-compare proves both produce identical components.
-    def cluster_survivors(algorithm):
-        def q(spark, sf):
-            docs = load_table(spark, "documents", sf).withColumn(
-                "block", F.concat_ws(
-                "_", F.coalesce("lang", F.lit("~null~")),
-                F.expr("n_chars div 50"))
-            )
-            # auto pair-gen: quadratic while the measured max block
-            # occupancy stays tight, inverted index past 500 — the
-            # registered production shape must not pin the quadratic
-            # (identical rows either way for min_jaccard>0, so the
-            # recursive-closure oracle is shape-independent).
-            pairs = D.ngram_jaccard_pairs_auto(
-                docs, "text", "doc_id", block_col="block", n=3, min_jaccard=0.05
-            )
-            return (
-                D.dedup_survivors(docs, pairs, "doc_id", algorithm=algorithm)
-                .select("doc_id").orderBy("doc_id")
-            )
-        return q
+    def cluster_survivors(spark, sf):
+        docs = load_table(spark, "documents", sf).withColumn(
+            "block", F.concat_ws(
+            "_", F.coalesce("lang", F.lit("~null~")),
+            F.expr("n_chars div 50"))
+        )
+        # auto pair-gen: quadratic while the measured max block
+        # occupancy stays tight, inverted index past 500 — the
+        # registered production shape must not pin the quadratic
+        # (identical rows either way for min_jaccard>0, so the
+        # recursive-closure oracle is shape-independent).
+        pairs = D.ngram_jaccard_pairs_auto(
+            docs, "text", "doc_id", block_col="block", n=3, min_jaccard=0.05
+        )
+        return (
+            D.dedup_survivors(docs, pairs, "doc_id")
+            .select("doc_id").orderBy("doc_id")
+        )
 
     _survivors_sql = f"""
         WITH RECURSIVE t AS (
@@ -320,10 +315,7 @@ def contribute(register) -> None:
         WHERE doc_id NOT IN (SELECT id FROM labels WHERE id <> label)
         ORDER BY doc_id
         """
-    register("dedup_cluster_survivors", cluster_survivors("propagation"),
-             _survivors_sql)
-    register("dedup_cluster_survivors_star", cluster_survivors("star"),
-             _survivors_sql)
+    register("dedup_cluster_survivors", cluster_survivors, _survivors_sql)
 
     # Embedding-based dedup tail: cosine near-dup pairs → connected
     # components → survivors, all SQL-expressible so the whole composed

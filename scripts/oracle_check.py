@@ -33,8 +33,8 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 # ASYNCHRONOUS detach queue, so JVM-side expression trees from
 # large-plan queries stay reachable for a while after Python drops
 # them. Chunked sessions bound that residue without a heap override;
-# 25 keeps the heavy d-prefix family (decontaminate/dedup, incl. both
-# iterative CC queries) at the START of a fresh session.
+# 25 keeps the heavy d-prefix family (decontaminate/dedup, incl. the
+# connected-components survivors query) at the START of a fresh session.
 # SESSION_CHUNK=0 runs one session for the whole sweep (green at
 # sf0.01).
 SESSION_CHUNK = int(__import__("os").environ.get("SESSION_CHUNK", "25"))

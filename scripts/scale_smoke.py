@@ -445,15 +445,15 @@ def _planted_long_chain_components(spark) -> None:
     """Adversarial connected-components probe: one chain of n nodes
     (diameter n-1). Min-label propagation would need n rounds — far past
     any iteration budget; the large-star/small-star variant is O(log² n)
-    rounds, so runtime must grow far slower than 10× for 10× nodes."""
-    from building_permissions_etl_spark.operators.dedup import (
-        connected_components_star,
-    )
+    rounds, so runtime must grow far slower than 10× for 10× nodes. Both
+    chains are under the driver union-find's edge cap, so the probe calls
+    the distributed loop directly."""
+    from building_permissions_etl_spark.operators.dedup import _star_components
 
     for n in (10_000, 100_000):
         edges = spark.range(n - 1).selectExpr("id AS id_a", "id + 1 AS id_b")
         t0 = time.time()
-        labels = connected_components_star(edges)
+        labels = _star_components(edges)
         n_in_min = labels.filter("label = 0").count()
         labels.unpersist()
         print(f"star_components chain n={n}: {round(time.time() - t0, 2)} s "

@@ -221,36 +221,36 @@ def test_minhash_oph_deterministic_and_no_self_match_on_short_docs(spark):
     assert got == again
 
 
-def test_connected_components_releases_caches(spark):
-    """At most the edge list + one labels generation stay cached during
-    the label-propagation loop, and the edge cache is dropped on return.
-    Short graph (no checkpoint rounds): net persisted-RDD growth is <= 1
-    (the returned labels). Long graph: growth is bounded by the returned
-    labels plus one checkpoint residue per 5 rounds — NOT one cache per
-    round as in the round-1 form."""
-    from building_permissions_etl_spark.operators.dedup import connected_components
+def test_connected_components_releases_caches(spark, monkeypatch):
+    """Under the edge cap the driver union-find leaves no persisted
+    residue. Over it (cap patched down to 2) the public entry falls
+    through to the star loop, which drops its id cache and every edge
+    checkpoint before returning: net persisted-RDD growth is exactly the
+    returned labels frame."""
+    from building_permissions_etl_spark.operators import dedup as D
 
     jsc = spark.sparkContext._jsc.sc()
+    star_calls = []
+    star = D._star_components
+    monkeypatch.setattr(D, "_star_components",
+                        lambda *a: star_calls.append(a) or star(*a))
 
-    # 4-node path: converges within 5 rounds, no checkpoint residue
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(3)], "id_a long, id_b long"
     )
     before = jsc.getPersistentRDDs().size()
-    labels = connected_components(edges, max_iters=20, local_edge_cap=0)
-    assert jsc.getPersistentRDDs().size() - before <= 1
+    labels = D.connected_components(edges)
     assert {(r.id, r.label) for r in labels.collect()} == {(i, 0) for i in range(4)}
-    labels.unpersist()
+    assert jsc.getPersistentRDDs().size() == before
+    assert star_calls == []
 
-    # 12-node path (diameter 11, ~12 rounds, 2 checkpoint rounds): every
-    # superseded checkpoint's RDD blocks are freed through the tracked
-    # release handle, and the final one too once the converged labels
-    # are a plain cache — growth is exactly the returned labels frame
+    monkeypatch.setattr(D, "CC_LOCAL_EDGE_CAP", 2)
     edges12 = spark.createDataFrame(
         [(i, i + 1) for i in range(11)], "id_a long, id_b long"
     )
     before = jsc.getPersistentRDDs().size()
-    labels12 = connected_components(edges12, max_iters=20, local_edge_cap=0)
+    labels12 = D.connected_components(edges12)
+    assert len(star_calls) == 1
     assert jsc.getPersistentRDDs().size() - before <= 1
     assert {(r.id, r.label) for r in labels12.collect()} == {(i, 0) for i in range(12)}
     labels12.unpersist()
@@ -294,109 +294,66 @@ def test_hot_bucket_cap_bounds_boilerplate_flood(spark):
 
 def test_star_components_long_chain_bounded_rounds(spark):
     """VERDICT r03 item 8: planted long-chain component. Min-label
-    propagation needs O(diameter) rounds (300 here — far past its
-    max_iters); the large-star/small-star variant must label the whole
-    chain within its default O(log² n) budget of 25 rounds."""
-    from building_permissions_etl_spark.operators.dedup import (
-        connected_components_star,
-    )
+    propagation would need O(diameter) rounds (300 here); the
+    large-star/small-star loop labels the whole chain in O(log² n)."""
+    from building_permissions_etl_spark.operators.dedup import _star_components
 
     n = 300
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
-    labels = connected_components_star(edges, local_edge_cap=0)
+    labels = _star_components(edges)
     got = {(r.id, r.label) for r in labels.collect()}
     labels.unpersist()
     assert got == {(i, 0) for i in range(n)}
 
 
-def test_star_components_match_propagation_on_random_graphs(spark):
-    """Property: both algorithms produce identical (id, label) maps on
-    arbitrary edge lists — islands, chains, stars, self-loops, dups."""
-    import random
+def test_star_components_raise_when_round_guard_reached(spark, monkeypatch):
+    """A loop that runs out of rounds before the edge set is stable
+    must raise, never return partial (non-minimal) labels."""
+    import pytest as _pytest
 
-    from building_permissions_etl_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
+    from building_permissions_etl_spark.operators import dedup as D
+
+    monkeypatch.setattr(D, "_CC_MAX_ROUNDS", 2)
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(299)], "id_a long, id_b long"
     )
-
-    rng = random.Random(42)
-    for trial in range(5):
-        n_nodes = rng.randint(2, 40)
-        n_edges = rng.randint(1, 60)
-        pairs = [
-            (rng.randrange(n_nodes), rng.randrange(n_nodes))
-            for _ in range(n_edges)
-        ]
-        df = spark.createDataFrame(pairs, "id_a long, id_b long")
-        base = connected_components(df, max_iters=50, local_edge_cap=0)
-        star = connected_components_star(df, local_edge_cap=0)
-        a = {(r.id, r.label) for r in base.collect()}
-        b = {(r.id, r.label) for r in star.collect()}
-        base.unpersist()
-        star.unpersist()
-        assert a == b, f"trial {trial}: {sorted(a ^ b)}"
+    with _pytest.raises(RuntimeError, match="did not converge"):
+        D._star_components(edges)
 
 
 def test_cc_small_graph_short_circuit_matches_loops(spark):
-    """Default-cap calls label small graphs on the driver (union-find);
-    the result must be bit-identical to both distributed loops, leave
-    no persisted residue, and fall through to the loop when the edge
-    list exceeds the cap."""
+    """Property: the driver union-find (the reference) and the
+    distributed star loop produce identical (id, label) maps on
+    arbitrary edge lists — islands, chains, self-loops, duplicate edges
+    and NULL endpoints. A NULL endpoint never merges components (null
+    join keys match nothing) and surfaces as a single (null, null) row.
+    The union-find leaves no persisted residue."""
     import random
 
     from building_permissions_etl_spark.operators import dedup as D
 
     rng = random.Random(7)
     jsc = spark.sparkContext._jsc.sc()
-    for trial in range(4):
+    node = lambda n: None if rng.random() < 0.05 else rng.randrange(n)
+    graphs = [[(None, 5), (5, None), (1, 2), (None, None), (7, 7)]]
+    for _ in range(4):
         n_nodes = rng.randint(2, 50)
-        pairs = [(rng.randrange(n_nodes), rng.randrange(n_nodes))
-                 for _ in range(rng.randint(1, 80))]
+        graphs.append([(node(n_nodes), node(n_nodes))
+                       for _ in range(rng.randint(1, 80))])
+    for trial, pairs in enumerate(graphs):
         df = spark.createDataFrame(pairs, "id_a long, id_b long")
         before = jsc.getPersistentRDDs().size()
         local = {(r.id, r.label)
                  for r in D.connected_components(df).collect()}
-        assert jsc.getPersistentRDDs().size() == before  # no cache residue
-        loop = D.connected_components(df, max_iters=50, local_edge_cap=0)
-        star = D.connected_components_star(df, local_edge_cap=0)
-        assert local == {(r.id, r.label) for r in loop.collect()}
-        assert local == {(r.id, r.label) for r in star.collect()}
-        loop.unpersist()
+        assert jsc.getPersistentRDDs().size() == before
+        star = D._star_components(df)
+        got = {(r.id, r.label) for r in star.collect()}
         star.unpersist()
-
-    # entry points agree on the local path too (same helper, same result)
-    df = spark.createDataFrame([(1, 2), (2, 3), (9, 9)], "id_a long, id_b long")
-    a = {(r.id, r.label) for r in D.connected_components(df).collect()}
-    b = {(r.id, r.label) for r in D.connected_components_star(df).collect()}
-    assert a == b == {(1, 1), (2, 1), (3, 1), (9, 9)}
-
-    # over-cap edge lists fall through to the distributed loop: a cap of
-    # 2 on a 3-edge graph must still produce loop-labeled results
-    small_cap = D.connected_components(df, local_edge_cap=2)
-    assert {(r.id, r.label) for r in small_cap.collect()} == a
-    small_cap.unpersist()
-
-
-def test_cc_small_graph_null_endpoints_match_loop_semantics(spark):
-    """NULL endpoints never merge components in the loops (null join
-    keys match nothing) and surface as a single (null, null) row; the
-    driver short-circuit must replicate that exactly."""
-    from building_permissions_etl_spark.operators import dedup as D
-
-    df = spark.createDataFrame(
-        [(None, 5), (5, None), (1, 2), (None, None)],
-        "id_a bigint, id_b bigint")
-    want = {(None, None), (5, 5), (1, 1), (2, 1)}
-    local = {(r.id, r.label) for r in D.connected_components(df).collect()}
-    loop = D.connected_components(df, max_iters=20, local_edge_cap=0)
-    star = D.connected_components_star(df, local_edge_cap=0)
-    assert local == want
-    assert {(r.id, r.label) for r in loop.collect()} == want
-    assert {(r.id, r.label) for r in star.collect()} == want
-    loop.unpersist()
-    star.unpersist()
+        assert local == got, f"trial {trial}: {sorted(local ^ got, key=str)}"
+        if trial == 0:
+            assert local == {(None, None), (5, 5), (1, 1), (2, 1), (7, 7)}
 
 
 def test_star_components_release_caches(spark):
@@ -406,16 +363,14 @@ def test_star_components_release_caches(spark):
     to the CacheManager), so net persisted-RDD growth after return is
     EXACTLY the returned labels frame. This is what lets a default-heap
     driver run the full registry sweep back-to-back."""
-    from building_permissions_etl_spark.operators.dedup import (
-        connected_components_star,
-    )
+    from building_permissions_etl_spark.operators.dedup import _star_components
 
     jsc = spark.sparkContext._jsc.sc()
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(99)], "id_a long, id_b long"
     )
     before = jsc.getPersistentRDDs().size()
-    labels = connected_components_star(edges, local_edge_cap=0)
+    labels = _star_components(edges)
     assert jsc.getPersistentRDDs().size() - before <= 1
     assert {(r.id, r.label) for r in labels.collect()} == {
         (i, 0) for i in range(100)
@@ -423,19 +378,33 @@ def test_star_components_release_caches(spark):
     labels.unpersist()
 
 
-def test_dedup_survivors_star_matches_default_and_validates(spark):
-    import pytest as _pytest
+def test_star_components_plans_bounded(spark, monkeypatch):
+    """Every round's edge set is checkpointed, so each round is planned
+    over a leaf of constant size: the analyzed tree handed to the
+    checkpoint has the same node count in every round after the first
+    (the first is the input edge list's own plan)."""
+    from building_permissions_etl_spark.operators import dedup as D
 
-    from building_permissions_etl_spark.operators.dedup import dedup_survivors
-    from pyspark.sql import functions as F
+    def n_nodes(node):
+        ch = node.children()
+        return 1 + sum(n_nodes(ch.apply(i)) for i in range(ch.size()))
 
-    df = spark.range(0, 8).select(F.col("id").alias("doc_id"))
-    pairs = spark.createDataFrame([(1, 5), (5, 7), (2, 3)], ["id_a", "id_b"])
-    star = sorted(r["doc_id"] for r in dedup_survivors(
-        df, pairs, "doc_id", algorithm="star").collect())
-    assert star == [0, 1, 2, 4, 6]
-    with _pytest.raises(ValueError, match="algorithm"):
-        dedup_survivors(df, pairs, "doc_id", algorithm="labelprop")
+    sizes = []
+    tracked = D._local_checkpoint_tracked
+
+    def recording(df):
+        sizes.append(n_nodes(df._jdf.queryExecution().analyzed()))
+        return tracked(df)
+
+    monkeypatch.setattr(D, "_local_checkpoint_tracked", recording)
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(59)], "id_a long, id_b long"
+    )
+    labels = D._star_components(edges)
+    assert {r.label for r in labels.collect()} == {0}
+    labels.unpersist()
+    assert len(sizes) >= 3
+    assert len(set(sizes[1:])) == 1, sizes
 
 
 def test_ngram_auto_forces_inverted_when_max_df_set(spark):
@@ -502,33 +471,26 @@ def test_ngram_auto_engages_inverted_on_oversized_block(spark):
 
 
 def test_checkpoint_released_per_result(spark):
-    """When the loop exhausts max_iters exactly on a checkpoint round,
-    the final labels are re-homed into a plain cache and the checkpoint
-    generation is freed BEFORE returning (local master) — per-result
-    handling, no ambient module state keyed on later calls. The returned
-    values must be intact and the only persisted residue is the labels
-    cache itself. Two back-to-back calls must not interfere: the first
-    result stays readable after the second call runs."""
-    from building_permissions_etl_spark.operators.dedup import (
-        connected_components,
-    )
+    """The final edge checkpoint is freed BEFORE returning (local
+    master) once the labels are a plain cache — per-result handling, no
+    ambient module state keyed on later calls. The returned values must
+    be intact and the only persisted residue is the labels cache itself.
+    Two back-to-back calls must not interfere: the first result stays
+    readable after the second call runs."""
+    from building_permissions_etl_spark.operators.dedup import _star_components
 
     jsc = spark.sparkContext._jsc.sc()
     before = jsc.getPersistentRDDs().size()
-    # 40-node chain, max_iters=5: round 5 is a checkpoint round and the
-    # chain has not converged -> loop exhausts right at a checkpoint cut
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(39)], "id_a long, id_b long"
     )
-    labels = connected_components(edges, max_iters=5, local_edge_cap=0)
-    # residue = the returned labels cache ONLY; the checkpoint RDD and
-    # every loop-generation cache are already gone
+    labels = _star_components(edges)
     assert jsc.getPersistentRDDs().size() <= before + 1
 
-    # the ADVICE hazard case: a SECOND iterative call before the first
-    # result is consumed must not unpersist the first result's data
+    # a SECOND call before the first result is consumed must not
+    # unpersist the first result's data
     small = spark.createDataFrame([(0, 1)], ["id_a", "id_b"])
-    l2 = connected_components(small, max_iters=5, local_edge_cap=0)
+    l2 = _star_components(small)
     assert {r["id"] for r in labels.collect()} == set(range(40))
     assert l2.count() == 2
     labels.unpersist()
@@ -542,7 +504,7 @@ def test_release_retained_checkpoints_local_noop(spark):
     from building_permissions_etl_spark.operators import dedup as D
 
     pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a int, id_b int")
-    D.connected_components(pairs, max_iters=20, local_edge_cap=0).collect()
+    D._star_components(pairs).collect()
     assert D._RETAINED_FINAL_RELEASES == []
     assert D.release_retained_checkpoints() == 0
 
@@ -554,10 +516,9 @@ def test_release_retained_checkpoints_cluster_path(spark, monkeypatch):
     from building_permissions_etl_spark.operators import dedup as D
 
     monkeypatch.setattr(D, "_eager_final_release_ok", lambda df: False)
-    # a 12-node chain forces >5 propagation rounds → a live checkpoint
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 12)], "id_a int, id_b int")
-    labels = D.connected_components(pairs, max_iters=20, local_edge_cap=0)
+    labels = D._star_components(pairs)
     assert len(D._RETAINED_FINAL_RELEASES) == 1
     assert D.release_retained_checkpoints() == 1
     assert D._RETAINED_FINAL_RELEASES == []

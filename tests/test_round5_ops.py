@@ -80,9 +80,6 @@ def test_survivors_by_keeps_best_not_min(spark):
     surv2 = sorted(r["doc_id"] for r in dedup_survivors_by(
         df, pairs2, "doc_id", [F.col("n_chars").desc()]).collect())
     assert 4 in surv2 and 5 not in surv2
-    with pytest.raises(ValueError, match="algorithm"):
-        dedup_survivors_by(df, pairs, "doc_id",
-                           [F.col("n_chars").desc()], algorithm="x")
 
 
 def test_top_fraction_per_group_threshold_math(spark):

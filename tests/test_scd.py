@@ -65,6 +65,22 @@ def test_scd2_idempotent_reapply(spark):
         sorted(map(tuple, twice.collect()))
 
 
+def test_scd2_chained_applications_keep_partition_count(spark):
+    """Applying the merge to its own output must not multiply
+    partitions: the count after three chained batches is no larger
+    than after one."""
+    cur = _dim(spark, [(k, "n", float(k), "X", _T0, None) for k in range(8)])
+    out, counts = cur, []
+    for i in range(3):
+        upd = _upd(spark, [(k, float(k + i + 1), "Y") for k in range(0, 10, 2)])
+        out = SCD.scd2_upsert(out, upd, "k", ["bal", "seg"], f"200{i + 1}-01-01")
+        counts.append(out.rdd.getNumPartitions())
+    assert counts[2] <= counts[0], counts
+    # 8 versions; four changed keys and one new key, then five changed
+    # keys twice: each change adds one row (old closed, new opened)
+    assert out.count() == 8 + 5 + 5 + 5
+
+
 def test_scd2_null_to_null_is_not_a_change(spark):
     cur = _dim(spark, [(1, "a", None, "X", _T0, None)])
     upd = _upd(spark, [(1, None, "X")])
