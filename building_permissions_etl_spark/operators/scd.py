@@ -38,7 +38,7 @@ def _any_tracked_differs(tracked: Sequence[str]) -> Column:
 
 def _reject_duplicate_keys(updates: DataFrame, key: str) -> None:
     """MERGE semantics: a batch with two rows for one key is ambiguous —
-    a left join would silently multiply the matched dimension rows and
+    the merge join would silently multiply the matched dimension rows and
     the caller's overwrite would persist the corruption. One bounded
     action per merge call (the batch is dims-sized by contract)."""
     dup = (updates.groupBy(key).count().filter(F.col("count") > 1)
