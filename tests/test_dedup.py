@@ -323,13 +323,35 @@ def test_star_components_raise_when_round_guard_reached(spark, monkeypatch):
         D._star_components(edges)
 
 
+def test_star_components_match_propagation_on_random_graphs(spark):
+    """Property: the star loop produces the min-label fixpoint (label =
+    min id reachable) on arbitrary edge lists — islands, chains, stars,
+    self-loops, dups. The reference labeling is the driver union-find."""
+    import random
+
+    from building_permissions_etl_spark.operators import dedup as D
+
+    rng = random.Random(42)
+    for trial in range(5):
+        n_nodes = rng.randint(2, 40)
+        n_edges = rng.randint(1, 60)
+        pairs = [
+            (rng.randrange(n_nodes), rng.randrange(n_nodes))
+            for _ in range(n_edges)
+        ]
+        df = spark.createDataFrame(pairs, "id_a long, id_b long")
+        want = {(r.id, r.label) for r in D.connected_components(df).collect()}
+        star = D._star_components(df)
+        got = {(r.id, r.label) for r in star.collect()}
+        star.unpersist()
+        assert want == got, f"trial {trial}: {sorted(want ^ got)}"
+
+
 def test_cc_small_graph_short_circuit_matches_loops(spark):
-    """Property: the driver union-find (the reference) and the
-    distributed star loop produce identical (id, label) maps on
-    arbitrary edge lists — islands, chains, self-loops, duplicate edges
-    and NULL endpoints. A NULL endpoint never merges components (null
-    join keys match nothing) and surfaces as a single (null, null) row.
-    The union-find leaves no persisted residue."""
+    """Property: the driver union-find and the distributed star loop
+    produce identical (id, label) maps on arbitrary edge lists, NULL
+    endpoints included, and the union-find leaves no persisted
+    residue."""
     import random
 
     from building_permissions_etl_spark.operators import dedup as D
@@ -337,12 +359,10 @@ def test_cc_small_graph_short_circuit_matches_loops(spark):
     rng = random.Random(7)
     jsc = spark.sparkContext._jsc.sc()
     node = lambda n: None if rng.random() < 0.05 else rng.randrange(n)
-    graphs = [[(None, 5), (5, None), (1, 2), (None, None), (7, 7)]]
-    for _ in range(4):
+    for trial in range(4):
         n_nodes = rng.randint(2, 50)
-        graphs.append([(node(n_nodes), node(n_nodes))
-                       for _ in range(rng.randint(1, 80))])
-    for trial, pairs in enumerate(graphs):
+        pairs = [(node(n_nodes), node(n_nodes))
+                 for _ in range(rng.randint(1, 80))]
         df = spark.createDataFrame(pairs, "id_a long, id_b long")
         before = jsc.getPersistentRDDs().size()
         local = {(r.id, r.label)
@@ -352,8 +372,23 @@ def test_cc_small_graph_short_circuit_matches_loops(spark):
         got = {(r.id, r.label) for r in star.collect()}
         star.unpersist()
         assert local == got, f"trial {trial}: {sorted(local ^ got, key=str)}"
-        if trial == 0:
-            assert local == {(None, None), (5, 5), (1, 1), (2, 1), (7, 7)}
+
+
+def test_cc_small_graph_null_endpoints_match_loop_semantics(spark):
+    """NULL endpoints never merge components in the star loop (null join
+    keys match nothing) and surface as a single (null, null) row; the
+    driver union-find must replicate that exactly."""
+    from building_permissions_etl_spark.operators import dedup as D
+
+    df = spark.createDataFrame(
+        [(None, 5), (5, None), (1, 2), (None, None), (7, 7)],
+        "id_a bigint, id_b bigint")
+    want = {(None, None), (5, 5), (1, 1), (2, 1), (7, 7)}
+    local = {(r.id, r.label) for r in D.connected_components(df).collect()}
+    star = D._star_components(df)
+    assert local == want
+    assert {(r.id, r.label) for r in star.collect()} == want
+    star.unpersist()
 
 
 def test_star_components_release_caches(spark):
