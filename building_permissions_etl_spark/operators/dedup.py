@@ -65,14 +65,14 @@ def _eager_final_release_ok(df: DataFrame) -> bool:
 # where eager release is unsafe (the cached result's recompute path runs
 # through the checkpoint — see _eager_final_release_ok). One entry per
 # distributed connected-components call; empty on a local master. GROWTH
-# CONTRACT: on a cluster this list grows by exactly one closure (one live
-# checkpoint generation + one py4j ref) per distributed call
-# until release_retained_checkpoints() is invoked — long-lived cluster
-# drivers running many graphs MUST call it between batches or accept
-# one retained generation per call. Appends and drains are serialized
-# by _RETAINED_LOCK so concurrent driver threads cannot race the list;
-# the closures themselves are idempotent-unsafe (pop-then-call under
-# the lock guarantees each runs once).
+# CONTRACT: on a cluster this list grows by exactly one closure (the
+# last checkpoint generation and the pairs' checkpoint + two py4j refs)
+# per distributed call until release_retained_checkpoints() is invoked —
+# long-lived cluster drivers running many graphs MUST call it between
+# batches or accept two retained checkpoints per call. Appends and
+# drains are serialized by _RETAINED_LOCK so concurrent driver threads
+# cannot race the list; the closures themselves are idempotent-unsafe
+# (pop-then-call under the lock guarantees each runs once).
 _RETAINED_LOCK = _threading.Lock()
 _RETAINED_FINAL_RELEASES: list = []
 
@@ -1032,30 +1032,28 @@ def _star_components(pairs: DataFrame, id_a: str = "id_a",
     Convergence is detected by edge-set stability (count + hash-sum in
     ONE aggregate); a loop that reaches ``_CC_MAX_ROUNDS`` raises.
 
-    Bounded plans: every round's edge set is cut with an eager
-    localCheckpoint, so each round is planned over a leaf of constant
-    size. (The rewrite references the prior plan ~5 times per round and
-    Catalyst's tree traversals revisit shared subtrees, so an uncut plan's
-    analysis cost is exponential in rounds.) Checkpoint blocks are NOT
+    Bounded plans: the caller's pairs and every round's edge set are cut
+    with an eager localCheckpoint, so each round is planned over a leaf
+    of constant size. (The rewrite references the prior plan ~5 times
+    per round and Catalyst's tree traversals revisit shared subtrees, so
+    an uncut plan's analysis cost is exponential in rounds.) Checkpoint blocks are NOT
     unpersistable through the DataFrame API (RDD-level persist, invisible
     to the CacheManager), so each generation is freed through its RDD
     handle (``_local_checkpoint_tracked``) as soon as the next one is
     materialized. After the final labels are cached and counted the last
-    generation is freed too: on a local master this leaves ZERO
-    checkpoint residue; on a cluster master it stays alive as the cached
-    labels' recompute path (see ``_eager_final_release_ok``). Exception
-    paths free the live checkpoint immediately — nothing is returned, so
-    it can have no consumer.
+    generation and the pairs' checkpoint are freed too: on a local master
+    this leaves ZERO checkpoint residue; on a cluster master both stay
+    alive as the cached labels' recompute path, under one retained
+    release (see ``_eager_final_release_ok``). Exception paths free the
+    live checkpoints immediately — nothing is returned, so they can have
+    no consumer.
     """
-    raw = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-    # big→small canonical orientation; self-loops carry no connectivity
-    # (their ids still get labels via the `ids` union below)
-    edges, ck_release = _local_checkpoint_tracked(
-        raw.filter(F.col("u") != F.col("v"))
-        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .distinct()
-    )
-    ids = raw.select(F.explode(F.array("u", "v")).alias("id")).distinct().cache()
+    # ONE evaluation of the caller's pair plan (the union-find probe is
+    # the only other): its (u, v) projection is checkpointed and feeds
+    # the first round, the ids and the starting signature
+    raw, raw_release = _local_checkpoint_tracked(
+        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v")))
+    ck_release = None
 
     def _signature(e: DataFrame) -> tuple:
         row = e.agg(
@@ -1065,10 +1063,19 @@ def _star_components(pairs: DataFrame, id_a: str = "id_a",
         return (row["n"], row["h"])
 
     try:
-        sig = _signature(edges)
+        # the rounds compare big→small, self-loop-free edge sets; the
+        # first round reads the raw pairs directly, because self-loops,
+        # duplicates and NULL endpoints never reach its large-star output
+        # (self-loops carry no connectivity; their ids still get labels
+        # via the `ids` union below)
+        sig = _signature(
+            raw.filter(F.col("u") != F.col("v"))
+            .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
+            .distinct()
+        )
+        ids = raw.select(F.explode(F.array("u", "v")).alias("id")).distinct()
+        edges = raw
         for _ in range(_CC_MAX_ROUNDS):
-            if sig[0] == 0:
-                break
             sym = edges.union(
                 edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
             )
@@ -1092,7 +1099,8 @@ def _star_components(pairs: DataFrame, id_a: str = "id_a",
             )
             superseded = ck_release
             edges, ck_release = _local_checkpoint_tracked(small)
-            superseded()
+            if superseded is not None:
+                superseded()
             new_sig = _signature(edges)
             if new_sig == sig:
                 break
@@ -1113,18 +1121,23 @@ def _star_components(pairs: DataFrame, id_a: str = "id_a",
         # (eagerly on local; on a cluster master it stays as the cached
         # labels' recompute path until the caller frees it via
         # release_retained_checkpoints()).
+        last, first = ck_release, raw_release
+
+        def release() -> None:
+            last()
+            first()
         if _eager_final_release_ok(labels):
-            ck_release()
+            release()
         else:
             with _RETAINED_LOCK:
-                _RETAINED_FINAL_RELEASES.append(ck_release)
-        ck_release = None
+                _RETAINED_FINAL_RELEASES.append(release)
+        ck_release = raw_release = None
     finally:
-        if ck_release is not None:
-            # exception path: nothing is returned, so the live
-            # checkpoint has no possible consumer — free it immediately
-            ck_release()
-        ids.unpersist()
+        # exception path: nothing is returned, so the live checkpoints
+        # have no possible consumer — free them immediately
+        for live in (ck_release, raw_release):
+            if live is not None:
+                live()
     return labels
 
 

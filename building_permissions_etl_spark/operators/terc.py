@@ -1,9 +1,9 @@
 """The terc-correction row transform (SURVEY.md §2.10) — the one "real
 UDF" of the reference (``assign_terc_and_validate`` applied row-wise via
 ``df.apply(axis=1)``, helpers:202,240-300) — re-expressed as pure SQL:
-nested ``CASE`` expressions, one projection per stage, plus ONE broadcast
-fuzzy lookup. No Python in the row path; the whole tree runs inside
-whole-stage codegen.
+nested ``CASE`` expressions in three projections, the fuzzy city lookup
+inlined as a scan of the county dim carried in the plan as a literal
+array. No Python in the row path, no join and no extra job.
 
 Decision tree (helpers:240-300), preserved branch-for-branch:
 
@@ -19,43 +19,41 @@ Decision tree (helpers:240-300), preserved branch-for-branch:
     g. already 'Unknown' → keep
     h. anything else → 'Unknown3'
 
-The fuzzy branch (b) is per-*city-name*, not per-row: distinct miasto
-values are matched against the (tiny, broadcast) dim and the result is
-joined back — at 100 TB the distinct city names stay bounded while rows
-don't. First-match is pinned to min(JPT_KOD_JE) — the reference's
-``iloc[0]`` depends on shapefile file order, a documented nondeterminism
-we fix (SURVEY.md §7 risk 2).
+The fuzzy branch (b) scans the dim's ~380 (code, name) pairs, collected
+once per run on the driver, inside the stage-1 ``CASE``: only rows that
+reach branch b pay for it, and no distinct-city pass, broadcast or join
+is planned around the rows. First-match is pinned to min(JPT_KOD_JE) —
+the reference's ``iloc[0]`` depends on shapefile file order, a
+documented nondeterminism we fix (SURVEY.md §7 risk 2).
 """
 
 from __future__ import annotations
+
+import json
+from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from building_permissions_etl_spark.functions.expr import sql_ident, sql_str
-from building_permissions_etl_spark.functions.text import ci_contains
 from building_permissions_etl_spark.schemas import VOIVODESHIPS
 
 UNKNOWN_CLASSES = ("Unknown", "Unknown2", "Unknown3")
 
 
-def _fuzzy_city_lookup(df: DataFrame, powiaty: DataFrame,
-                       miasto_col: str) -> DataFrame:
-    """Distinct city names → first (min-key) county whose name contains
-    the city case-insensitively. Returns (miasto, __fuzzy_terc)."""
-    # usability check is notnull & != 'nan' ONLY (helpers:272): an empty
-    # string is "usable" and substring-matches every county — mirrored.
-    cities = df.select(F.col(miasto_col).alias("__miasto")).filter(
-        F.col("__miasto").isNotNull() & (F.col("__miasto") != "nan")
-    ).distinct()
-    matched = cities.join(
-        F.broadcast(powiaty.select("JPT_KOD_JE", "JPT_NAZWA_")),
-        ci_contains(F.col("JPT_NAZWA_"), F.col("__miasto")),
-        "left",
-    )
-    return matched.groupBy("__miasto").agg(
-        F.min("JPT_KOD_JE").alias("__fuzzy_terc")
-    )
+def _fuzzy_city_sql(counties: Iterable[tuple], miasto: str) -> str:
+    """SQL text: the min code among the counties whose name contains
+    ``miasto`` case-insensitively (C12, a literal substring: ``%``, ``_``
+    and ``.`` match only themselves), NULL when none does. The counties
+    travel as ONE JSON string literal, which the optimizer folds into a
+    constant array (380 struct literals in the SQL text took three times
+    as long to parse and analyse: about 0.2 s against 0.07 s, warm).
+    ``array_min`` skips NULL codes; a NULL name contains nothing."""
+    pairs = [{"k": None if k is None else str(k), "n": n} for k, n in counties]
+    array = (f"from_json({sql_str(json.dumps(pairs, ensure_ascii=False))},"
+             " 'array<struct<k: string, n: string>>')")
+    return (f"array_min(transform(filter({array},"
+            f" x -> contains(lower(x.n), lower({miasto}))), x -> x.k))")
 
 
 def _rlike(sql: str, pattern: str) -> str:
@@ -64,20 +62,18 @@ def _rlike(sql: str, pattern: str) -> str:
 
 def correct_terc(
     df: DataFrame,
-    powiaty: DataFrame,
+    counties: Iterable[tuple],
     terc_col: str = "terc",
     jn_col: str = "jednostki_numer",
     miasto_col: str = "miasto",
 ) -> DataFrame:
     """Apply the full §2.10 tree; replaces ``terc`` and adds ``untypical``.
 
-    Each stage is one SQL-text projection, so the plan is analysed twice
-    instead of once per derived column."""
+    ``counties`` are the county dim's (JPT_KOD_JE, JPT_NAZWA_) pairs.
+    Each step is one SQL-text projection, so the plan is analysed three
+    times instead of once per derived column."""
     cols = df.columns
-    lookup = _fuzzy_city_lookup(df, powiaty, miasto_col)
-    df = df.join(F.broadcast(lookup), df[miasto_col] == lookup["__miasto"], "left")
-
-    t, jn = sql_ident(terc_col), sql_ident(jn_col)
+    t, jn, city = sql_ident(terc_col), sql_ident(jn_col), sql_ident(miasto_col)
     # canonicalize the pandas float-read artifact first (helpers:37,200)
     numericish, float_tail = _rlike(t, r"^\d+(\.0)?$"), sql_str(r"\.0$")
     c = f"CASE WHEN {numericish} THEN regexp_replace({t}, {float_tail}, '') ELSE {t} END"
@@ -88,15 +84,24 @@ def correct_terc(
     # jn usability is notnull & != 'nan' ONLY (helpers:266) — an empty
     # string jn is used (→ ''[:4] = '' → stage 2 'Unknown3'), faithfully.
     jn_ok = f"({jn} IS NOT NULL AND {jn} != 'nan')"
+    # miasto usability is the same notnull & != 'nan' (helpers:272): an
+    # empty city is "usable" and substring-matches every county
+    city_ok = f"({city} IS NOT NULL AND {city} != 'nan')"
 
-    # stage 1: assignment
+    # stage 1: assignment; a nullish code that neither branch a nor b
+    # replaces stays NULL here, so the county scan runs at most once per
+    # row (a second reference would run it again: Spark does not share
+    # subexpressions between CASE branches)
     df = df.selectExpr(
         *map(sql_ident, cols),
         f"CASE WHEN {nullish} THEN CASE WHEN {jn_ok} THEN substring({jn}, 1, 4)"
-        " WHEN __fuzzy_terc IS NOT NULL THEN __fuzzy_terc ELSE 'Unknown' END"
-        f" ELSE {c} END AS __terc1",
-        f"CASE WHEN {nullish} THEN CASE WHEN {jn_ok} OR __fuzzy_terc IS NOT NULL"
-        " THEN 'Matched' ELSE 'Unknown' END END AS __unt1",
+        f" WHEN {city_ok} THEN {_fuzzy_city_sql(counties, city)} END"
+        f" ELSE {c} END AS __terc0",
+    )
+    df = df.selectExpr(
+        *map(sql_ident, cols),
+        "coalesce(__terc0, 'Unknown') AS __terc1",
+        f"CASE WHEN {nullish} THEN nvl2(__terc0, 'Matched', 'Unknown') END AS __unt1",
     )
 
     # stage 2: validation (order of the reference's if/elif chain matters)

@@ -13,7 +13,9 @@ and the scheduler stays external (cron/Airflow/Dagster calling
                 animation, category bar chart → SVG files (no plotting
                 libraries needed; see operators/choropleth.py)
     all       — ingest → aggregate in sequence, reading the county dim
-                once (its schema from a parquet footer, no job); the
+                once: one collect of its codes and names (its schema
+                from a parquet footer, no job) feeds the terc
+                correction and the aggregate's dim completion; the
                 result carries the ingest audit and the aggregate rows
                 observed on the sink's write (no validation: run
                 ``validate`` separately)
@@ -107,13 +109,13 @@ def run(spark: SparkSession, argv: list[str]) -> dict:
         from building_permissions_etl_spark.pipeline import permissions
         from building_permissions_etl_spark.sources.sinks import read_parquet_table
 
-        powiaty = read_parquet_table(spark, ns.powiaty)
+        dim = permissions.county_dim(read_parquet_table(spark, ns.powiaty))
         result = {"task": ns.task}
         if ns.task != "aggregate":
             result.update(permissions.ingest_permissions(
-                spark, ns.csv, ns.fact, powiaty, exec_date))
+                spark, ns.csv, ns.fact, dim, exec_date))
         if ns.task != "ingest":
-            out = permissions.superior_aggregates(spark, ns.fact, ns.agg, powiaty, exec_date)
+            out = permissions.superior_aggregates(spark, ns.fact, ns.agg, dim, exec_date)
             # the rows the sink wrote, observed during its write: counting
             # the returned frame (or the dim) would be another job
             result["aggregate_rows"] = out.written.get["rows"]

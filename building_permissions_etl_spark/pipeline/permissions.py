@@ -3,10 +3,12 @@ re-architecture of the reference DAG's ingest + aggregate tasks
 (dags/aggregates_python.py:49-85), parameterized by logical date (never
 wall-clock, helpers:101-102).
 
-Ingest (one CSV scan, one write job — the fuzzy join is broadcast):
-    read CSV (S2) → parse event time w/ coerce-to-null (C5) → mode-
-    dependent range filter (F1/F2) → [cached] → terc correction (§2.10),
-    its distinct-city lookup built from the cached rows → audit (A7)
+Ingest (one job: the CSV scan and the write):
+    read CSV (S2) → in update mode, a range over the raw event-time text
+    that the CSV reader evaluates before converting the other columns →
+    parse event time w/ coerce-to-null (C5) → mode-dependent range
+    filter (F1/F2) → terc correction (§2.10), its fuzzy city branch a
+    scan of the county dim's rows inside the projection → audit (A7)
     observed on the write → drop Unknown* (F4) → drop null event time
     (F3) → partitioned clustered write (S4).
 
@@ -18,22 +20,24 @@ codes and the rodzaj×kategoria domain (SURVEY.md §7 risk 4), not by the
 input — so it is pivoted on the driver, as the reference's pandas
 ``pivot_table`` did (helpers:431): observed pivot cells (A1) + per-type
 marginals (A2), named deromanized/sanitized (C4/C21) → injection date/
-reorder/rename (C19/F9/F10) → dim completion from the dim's collected
-keys (J2+J3+U1) → sorted rows as one Arrow ``LocalRelation`` partition,
+reorder/rename (C19/F9/F10) → dim completion from the county dim's rows
+(J2+J3+U1) → sorted rows as one Arrow ``LocalRelation`` partition,
 written as one file (O1), its rows observed → schema-evolving append
 (S13), a growing schema committed by renaming a staging copy in. The
 pivot as a ~180-column Spark plan costs more planning and codegen than
 its data; ``plans/flagship.py`` can use that shape because its cells are
 fixed and need no collect, while these depend on the data.
 
-No step runs a job only to read metadata: the sink probes and the
-fact's and sink's schemas come from parquet footers read on the driver
-(``sources/sinks.py``).
+The county dim is collected once per run (``county_dim``) and feeds
+both tasks. No step runs a job only to read metadata: the sink probes
+and the fact's and sink's schemas come from parquet footers read on the
+driver (``sources/sinks.py``).
 """
 
 from __future__ import annotations
 
 import datetime as dt
+from typing import NamedTuple
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -66,6 +70,39 @@ from building_permissions_etl_spark.sources.sinks import (
 )
 
 
+class CountyDim(NamedTuple):
+    """The county dim on the driver: its (JPT_KOD_JE, JPT_NAZWA_) rows,
+    and the key's field, whose type and nullability the aggregate's
+    ``unit_id`` keeps."""
+    key: StructField
+    rows: list[tuple]
+
+
+def county_dim(powiaty: DataFrame) -> CountyDim:
+    """The dim's codes and names in one collect (~380 rows)."""
+    key = powiaty.schema["JPT_KOD_JE"]
+    return CountyDim(key, [tuple(r) for r in powiaty.select(key.name, "JPT_NAZWA_").collect()])
+
+
+def _timestamp_sql(d: dt.datetime) -> str:
+    """``d`` as a SQL timestamp literal, read in the session time zone
+    like the parsed event times."""
+    return f"TIMESTAMP {sql_str(d.isoformat(' '))}"
+
+
+def event_text_prefilter(lo: dt.datetime, hi: dt.datetime) -> str:
+    """SQL text over the RAW event-time column that keeps every row whose
+    parsed time lies strictly between ``lo`` and ``hi``: the parse
+    accepts only canonical ``yyyy-MM-dd HH:mm:ss`` text (or a negative
+    year, which is before any ``lo``), and canonical text orders as its
+    time, so the row's text starts with a date from ``lo``'s to ``hi``'s.
+    Plain comparisons with string literals, so the CSV reader evaluates
+    them before it converts the row's other columns."""
+    t = sql_ident(EVENT_TIME_COL)
+    return (f"{t} >= {sql_str(lo.date().isoformat())}"
+            f" AND {t} < {sql_str((hi.date() + dt.timedelta(days=1)).isoformat())}")
+
+
 def first_day_of_previous_month(d: dt.datetime) -> dt.datetime:
     """C8 (helpers:115-127)."""
     first_this = d.replace(day=1, hour=0, minute=0, second=0, microsecond=0)
@@ -76,7 +113,7 @@ def ingest_permissions(
     spark: SparkSession,
     csv_path: str,
     fact_path: str,
-    powiaty: DataFrame,
+    dim: CountyDim,
     execution_date: dt.datetime,
 ) -> dict:
     """Tasks 2+3 of the DAG: validate/parse, mode-select, correct, load.
@@ -88,30 +125,25 @@ def ingest_permissions(
     scheduler), observed on the fact write.
     """
     mode = "update" if table_exists_nonempty(spark, fact_path) else "full"
-    df = parse_event_time(read_permissions_csv(spark, csv_path))
-
-    t = F.col(EVENT_TIME_COL)
+    raw = read_permissions_csv(spark, csv_path)
+    t, end = sql_ident(EVENT_TIME_COL), _timestamp_sql(execution_date)
     if mode == "update":
         lo = first_day_of_previous_month(execution_date)
-        df = df.filter((t > F.lit(lo)) & (t < F.lit(execution_date)))
+        raw = raw.filter(event_text_prefilter(lo, execution_date))
+        window = f"{t} > {_timestamp_sql(lo)} AND {t} < {end}"
     else:
-        df = df.filter(t < F.lit(execution_date))
+        window = f"{t} < {end}"
+    df = parse_event_time(raw).filter(window)
 
-    # one CSV scan: the terc lookup's distinct cities and the write both
-    # read these cached rows, and the audit is observed on the write
-    # instead of being a separate action
-    rows = df.cache()
-    try:
-        audit = Observation()
-        corrected = correct_terc(rows, powiaty).observe(audit, *correction_audit_exprs())
-        clean = drop_invalid_terc(corrected).na.drop(subset=[EVENT_TIME_COL])
-
-        write_fact_partitioned(
-            clean, fact_path, EVENT_TIME_COL, "terc",
-            overwrite_partitions=(mode == "update"),
-        )
-    finally:
-        rows.unpersist()
+    # one CSV scan, one job: the audit is observed on the write instead
+    # of being a separate action
+    audit = Observation()
+    corrected = correct_terc(df, dim.rows).observe(audit, *correction_audit_exprs())
+    clean = drop_invalid_terc(corrected).na.drop(subset=[EVENT_TIME_COL])
+    write_fact_partitioned(
+        clean, fact_path, EVENT_TIME_COL, "terc",
+        overwrite_partitions=(mode == "update"),
+    )
     return {"mode": mode, **audit.get}
 
 
@@ -137,7 +169,7 @@ def superior_aggregates(
     spark: SparkSession,
     fact_path: str,
     agg_path: str,
-    powiaty: DataFrame,
+    dim: CountyDim,
     execution_date: dt.datetime,
 ) -> DataFrame:
     """Task 4 (helpers:323-426): the flagship monthly aggregate — one
@@ -164,7 +196,7 @@ def superior_aggregates(
     # the pruning filter and the window counts cannot disagree on where
     # a window starts.
     t, month = sql_ident(EVENT_TIME_COL), sql_ident(MONTH_COL)
-    end = f"TIMESTAMP {sql_str(execution_date.isoformat(' '))}"
+    end = _timestamp_sql(execution_date)
     bounds = {f"{n}m": f"{end} - INTERVAL {n} MONTHS" for n in (3, 2, 1)}
     windows = {s: f"{t} >= {lo}" for s, lo in bounds.items()}
     base = fact.filter(
@@ -214,9 +246,8 @@ def superior_aggregates(
     # dim dropped, absent counts 0 (C19/F9/F10: constant injection date),
     # sorted by unit with NULLs first (O1). Built from an Arrow table, so
     # the frame is a LocalRelation: no Python worker, no plan to compile.
-    key = powiaty.schema["JPT_KOD_JE"]
-    units = sorted((r[0] for r in powiaty.select(key.name).collect()),
-                   key=lambda u: (u is not None, u))
+    key = dim.key
+    units = sorted((r[0] for r in dim.rows), key=lambda u: (u is not None, u))
     rows = [counts.get(u, [0] * len(position)) for u in units]
     inj = execution_date.strftime("%Y-%m-%d %H:%M:%S.%f")[:-3] + " UTC"
     columns = [units, [inj] * len(units)] + [[row[i] for row in rows] for i in range(len(position))]

@@ -335,7 +335,8 @@ def contribute(register) -> None:
             F.when(k % 3 == 1, F.substring(F.lower("n_name"), 2, 3))
             .otherwise(F.lit(None).cast("string")).alias("miasto"),
         )
-        return correct_terc(src, dim).select("id", "terc", "untypical").orderBy("id")
+        counties = [tuple(r) for r in dim.collect()]
+        return correct_terc(src, counties).select("id", "terc", "untypical").orderBy("id")
 
     _VV = "('02','04','06','08','10','12','14','16','18','20','22','24','26','28','30','32')"
     register(

@@ -26,6 +26,7 @@ The reference's BigQuery sink semantics, on parquet:
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import _parse_datatype_json_string
@@ -78,7 +79,11 @@ def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
     still discovered from the directory names). A column missing from
     the table therefore stays an analysis error. A path without any data
     file is left to Spark's reader, which raises as it always has."""
-    found = _table_footer(spark, path)
+    return _read_with_footer(spark, path, _table_footer(spark, path))
+
+
+def _read_with_footer(spark: SparkSession, path: str, found) -> DataFrame:
+    """``read_parquet_table`` given ``path``'s ``_table_footer`` result."""
     if found is None:
         return spark.read.parquet(path)
     converter = _jclass(spark, f"{_SPARK_PARQUET}.ParquetToSparkSchemaConverter")(
@@ -98,26 +103,34 @@ def _table_footer(spark: SparkSession, path: str):
     driver-local ``os.path.exists`` would be False for EVERY distributed
     path (s3a://, hdfs://). Entries named ``_*`` or ``.*`` are skipped,
     as Spark's file index skips them (metadata, uncommitted output).
-    Footers go through Spark's own reader, so a corrupt one raises
-    CANNOT_READ_FILE_FOOTER; that reader skips the row groups, so the
-    row count takes a second footer read that keeps them."""
+    Each footer is read once, row groups included, and gives both the
+    schema and the row count. A footer that cannot be read is read
+    again through Spark's own footer reader, which raises it as
+    CANNOT_READ_FILE_FOOTER."""
     fs, hpath = _filesystem(spark, path)
     root = hpath(path)
     if not fs.exists(root):
         return None
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     visible = _jclass(spark, "org.apache.hadoop.fs.GlobFilter")("[!_.]*")
-    footers = getattr(_jclass(spark, f"{_SPARK_PARQUET}.ParquetFileFormat$"), "MODULE$")
+    read_footer = _jclass(spark, f"{_SPARK_PARQUET}.ParquetFooterReader").readFooter
+    no_filter = _jclass(spark, "org.apache.parquet.format.converter.ParquetMetadataConverter"
+                        ).NO_FILTER
     found = None
     for st in _data_files(fs, root, visible):
-        one = _jclass(spark, "java.util.List").of(st)
-        one = _jclass(spark, "scala.jdk.javaapi.CollectionConverters").asScala(one).toSeq()
-        footer = footers.readParquetFootersInParallel(conf, one, False).head()
-        blocks = _jclass(spark, f"{_SPARK_PARQUET}.ParquetFooterReader").readFooter(
-            _jclass(spark, "org.apache.parquet.hadoop.util.HadoopInputFile").fromStatus(st, conf),
-            _jclass(spark, "org.apache.parquet.format.converter.ParquetMetadataConverter")
-            .NO_FILTER).getBlocks()
-        found = footer, sum(blocks.get(i).getRowCount() for i in range(blocks.size()))
+        try:
+            meta = read_footer(
+                _jclass(spark, "org.apache.parquet.hadoop.util.HadoopInputFile").fromStatus(
+                    st, conf), no_filter)
+        except Py4JJavaError:
+            one = _jclass(spark, "java.util.List").of(st)
+            one = _jclass(spark, "scala.jdk.javaapi.CollectionConverters").asScala(one).toSeq()
+            getattr(_jclass(spark, f"{_SPARK_PARQUET}.ParquetFileFormat$"), "MODULE$"
+                    ).readParquetFootersInParallel(conf, one, False)
+            raise
+        blocks = meta.getBlocks()
+        found = (_jclass(spark, "org.apache.parquet.hadoop.Footer")(st.getPath(), meta),
+                 sum(blocks.get(i).getRowCount() for i in range(blocks.size())))
         if found[1]:
             break
     return found
@@ -173,11 +186,14 @@ def append_with_schema_evolution(
             f"interrupted, so {previous} may hold the only complete copy of "
             f"the table; restore or remove it by hand before writing")
 
-    if not table_exists_nonempty(spark, path):
+    # one listing and footer read answers both the probe (S6) and the
+    # sink's schema
+    found = _table_footer(spark, path)
+    if found is None or not found[1]:
         df.write.mode("overwrite").parquet(path)
         return
 
-    existing = read_parquet_table(spark, path)
+    existing = _read_with_footer(spark, path, found)
     df_types, sink_types = dict(df.dtypes), dict(existing.dtypes)
     missing_keys = [k for k in key_cols
                     if k not in df_types or k not in sink_types]

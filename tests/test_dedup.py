@@ -442,6 +442,36 @@ def test_star_components_plans_bounded(spark, monkeypatch):
     assert len(set(sizes[1:])) == 1, sizes
 
 
+def test_star_components_evaluate_pair_plan_once(spark, monkeypatch):
+    """Above the edge cap the star loop evaluates the caller's pair plan
+    once, into the checkpoint that feeds the edge set, the ids and the
+    starting signature (a counting UDF on a 59-pair chain, cap patched
+    to 10). The union-find probe evaluates part of it too, but its
+    limited task ends before the Python worker reports its accumulator
+    updates, so the count sees only the full passes: 59. The loop that
+    checkpointed the filtered edge set and cached the ids counted 177
+    (the ``u != v`` filter, pushed below the UDF's projection, evaluates
+    the UDF a second time in the edge checkpoint)."""
+    from pyspark.sql.types import LongType
+
+    from building_permissions_etl_spark.operators import dedup as D
+
+    monkeypatch.setattr(D, "CC_LOCAL_EDGE_CAP", 10)
+    calls = spark.sparkContext.accumulator(0)
+
+    def counted(v):
+        calls.add(1)
+        return v
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(59)], "id_a long, id_b long"
+    ).select("id_a", F.udf(counted, LongType())("id_b").alias("id_b"))
+    labels = D.connected_components(pairs)
+    assert {(r.id, r.label) for r in labels.collect()} == {(i, 0) for i in range(60)}
+    labels.unpersist()
+    assert calls.value == 59
+
+
 def test_ngram_auto_forces_inverted_when_max_df_set(spark):
     """A max_df cutoff changes semantics (df-filtered shingle universe);
     only the inverted shape implements it, so auto must pick that shape

@@ -8,6 +8,8 @@ import datetime as dt
 import os
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from building_permissions_etl_spark.functions.expr import sql_ident, sql_str
@@ -21,6 +23,8 @@ from building_permissions_etl_spark.operators.terc import (
 from building_permissions_etl_spark.pipeline.permissions import (
     _cell_column,
     _short_rodzaj,
+    county_dim,
+    event_text_prefilter,
     first_day_of_previous_month,
     ingest_permissions,
     superior_aggregates,
@@ -109,13 +113,17 @@ def _write_csv(path, rows):
 
 
 @pytest.fixture(scope="module")
-def powiaty(spark):
+def dim(spark):
     rows = [("1465", "Warsaw County", "P"), ("0201", "Wroclaw County", "P"),
             ("0463", "Krakow County", "P"), ("2261", "Gdansk County", "P")]
-    return spark.createDataFrame(rows, ["JPT_KOD_JE", "JPT_NAZWA_", "geometry"])
+    return county_dim(spark.createDataFrame(rows, ["JPT_KOD_JE", "JPT_NAZWA_", "geometry"]))
 
 
-def test_full_pipeline(spark, powiaty, tmp_path):
+def _dim(spark, rows):
+    return county_dim(spark.createDataFrame(rows, "JPT_KOD_JE string, JPT_NAZWA_ string"))
+
+
+def test_full_pipeline(spark, dim, tmp_path):
     csv = str(tmp_path / "perms.csv")
     fact = str(tmp_path / "fact")
     agg = str(tmp_path / "agg")
@@ -123,20 +131,20 @@ def test_full_pipeline(spark, powiaty, tmp_path):
 
     # --- a window with no rows: a zero-row audit, and the table stays
     # "empty" for the probe, so the next ingest is still a full load -----
-    nothing = ingest_permissions(spark, csv, fact, powiaty, dt.datetime(2021, 12, 1))
+    nothing = ingest_permissions(spark, csv, fact, dim, dt.datetime(2021, 12, 1))
     assert nothing["total_rows"] == 0 and nothing["pct_invalid"] is None
 
     # --- full-mode ingest ------------------------------------------------
     spark.catalog.clearCache()
-    audit = ingest_permissions(spark, csv, fact, powiaty, EXEC_DATE)
-    # the cached CSV rows are released once the fact write is done
+    audit = ingest_permissions(spark, csv, fact, dim, EXEC_DATE)
+    # the ingest caches nothing: the CSV scan feeds the write directly
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     assert audit["mode"] == "full"
     assert audit["total_rows"] > 0
     # the audit observed on the write equals the standalone A7 aggregate
     rows = parse_event_time(read_permissions_csv(spark, csv)).filter(
         F.col(EVENT_TIME_COL) < F.lit(EXEC_DATE))
-    expected = correction_audit_metrics(correct_terc(rows, powiaty)).first().asDict()
+    expected = correction_audit_metrics(correct_terc(rows, dim.rows)).first().asDict()
     assert audit == {"mode": "full", **expected}
     loaded = spark.read.parquet(fact)
     assert "month" in loaded.columns
@@ -148,19 +156,20 @@ def test_full_pipeline(spark, powiaty, tmp_path):
     assert _spark_jobs(spark, lambda: table_exists_nonempty(spark, fact)) == (True, 0)
 
     # --- update-mode ingest is idempotent (dynamic partition overwrite) --
-    audit2 = ingest_permissions(spark, csv, fact, powiaty, EXEC_DATE)
+    audit2 = ingest_permissions(spark, csv, fact, dim, EXEC_DATE)
     assert audit2["mode"] == "update"
     n1 = spark.read.parquet(fact).count()
-    ingest_permissions(spark, csv, fact, powiaty, EXEC_DATE)
+    ingest_permissions(spark, csv, fact, dim, EXEC_DATE)
     assert spark.read.parquet(fact).count() == n1   # re-run: no double count
 
     # --- flagship aggregate ---------------------------------------------
     spark.catalog.clearCache()
     out, jobs = _spark_jobs(
-        spark, lambda: superior_aggregates(spark, fact, agg, powiaty, EXEC_DATE))
-    # one narrow aggregate (two AQE jobs), the dim-key collect and the
-    # write; the pivot as a wide Spark plan takes 5
-    assert jobs <= 4
+        spark, lambda: superior_aggregates(spark, fact, agg, dim, EXEC_DATE))
+    # one narrow aggregate (two AQE jobs) and the write: the dim's keys
+    # come with the driver rows the caller collected once; the pivot as
+    # a wide Spark plan takes 5
+    assert jobs <= 3
     # the wide frame is driver data: its optimized plan reads a LocalRelation
     leaf = out._jdf.queryExecution().optimizedPlan()
     while leaf.children().nonEmpty():
@@ -212,8 +221,8 @@ def test_full_pipeline(spark, powiaty, tmp_path):
     csv2 = str(tmp_path / "perms2.csv")
     _write_csv(csv2, _csv_rows(n=60, kategorias=("X",)))
     fact2 = str(tmp_path / "fact2")
-    ingest_permissions(spark, csv2, fact2, powiaty, EXEC_DATE)
-    superior_aggregates(spark, fact2, agg, powiaty, EXEC_DATE)
+    ingest_permissions(spark, csv2, fact2, dim, EXEC_DATE)
+    superior_aggregates(spark, fact2, agg, dim, EXEC_DATE)
     evolved = spark.read.parquet(agg)
     new_cols = [c for c in evolved.columns if "_kat_10_" in c]
     assert new_cols, "new kategoria X must mint kat_10 columns"
@@ -222,6 +231,97 @@ def test_full_pipeline(spark, powiaty, tmp_path):
     assert evolved.count() == 8                      # 2 runs × 4 counties
     assert first_run.count() == 8
     assert evolved.agg(F.min(new_cols[0])).first()[0] == 0
+
+
+def test_update_month_runs_five_jobs(spark, tmp_path, monkeypatch):
+    """An update month of ``cli all`` runs five Spark jobs: the county
+    dim's collect, the ingest's scan-and-write, the aggregate's narrow
+    aggregate (two AQE jobs) and its append. The ingest's executed plan
+    caches nothing and broadcasts nothing: the fuzzy city branch is a
+    scan of the dim's rows inside the projection."""
+    from building_permissions_etl_spark.pipeline import cli
+    from building_permissions_etl_spark.pipeline import permissions as P
+    from tests.plan_nodes import iter_plan_nodes
+
+    csv, dim_path = str(tmp_path / "perms.csv"), str(tmp_path / "powiaty")
+    _write_csv(csv, _csv_rows())
+    spark.createDataFrame(
+        [("1465", "Warsaw County"), ("0201", "Wroclaw County")],
+        "JPT_KOD_JE string, JPT_NAZWA_ string").write.parquet(dim_path)
+    def month(date):
+        return cli.run(spark, ["all", "--date", date, "--csv", csv, "--powiaty", dim_path,
+                               "--fact", str(tmp_path / "fact"), "--agg", str(tmp_path / "agg")])
+
+    assert month("2022-06-01")["mode"] == "full"
+
+    written = []
+    write = P.write_fact_partitioned
+    monkeypatch.setattr(P, "write_fact_partitioned",
+                        lambda df, *a, **k: written.append(df) or write(df, *a, **k))
+    result, jobs = _spark_jobs(spark, lambda: month("2022-07-01"))
+    assert result["mode"] == "update" and result["total_rows"] > 0
+    assert jobs == 5
+    nodes = {n.nodeName() for n in iter_plan_nodes(written[0])}
+    assert not nodes & {"InMemoryTableScan", "BroadcastExchange", "BroadcastNestedLoopJoin"}
+
+
+def _odd_event_times():
+    """Event-time text around a month window: canonical times (on the
+    bounds too), ``brak daty``, padding, single-digit fields, signed and
+    extra-digit years, other separators."""
+    canonical = st.datetimes(dt.datetime(2022, 3, 25), dt.datetime(2022, 8, 5)).map(
+        lambda d: d.strftime("%Y-%m-%d %H:%M:%S"))
+    bounds = st.sampled_from([
+        "2022-06-01 00:00:00", "2022-06-01 00:00:01", "2022-05-31 23:59:59",
+        "2022-07-01 00:00:00", "2022-06-30 23:59:59", "2022-07-01 11:59:59",
+        "2022-07-01 12:00:00", "2022-07-01 12:00:01", "2022-07-02 00:00:00",
+    ])
+    odd = st.sampled_from([
+        "brak daty", "", "2022-06", "2022-06-15", "2022-6-15 12:00:00",
+        "2022-06-5 12:00:00", "2022-06-15 1:00:00", "+2022-06-15 12:00:00",
+        "02022-06-15 12:00:00", "-2022-06-15 12:00:00", "2022-06-15T12:00:00",
+        "2022/06/15 12:00:00", "2022-06-15 12:00:00.5",
+    ])
+    padded = st.tuples(st.sampled_from([" ", "  ", "0", "\t"]), canonical, st.booleans()).map(
+        lambda p: p[0] + p[1] if p[2] else p[1] + p[0])
+    return st.one_of(canonical, bounds, odd, padded, st.text(max_size=12))
+
+
+@pytest.mark.usefixtures("spark")
+@settings(max_examples=12, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(times=st.lists(_odd_event_times(), min_size=1, max_size=30),
+       when=st.sampled_from([dt.datetime(2022, 7, 1), dt.datetime(2022, 7, 1, 12)]))
+def test_event_text_prefilter_keeps_every_parsed_row(spark, times, when):
+    """The update ingest's raw-text prefilter keeps every row that the
+    exact parsed window keeps (a midnight and a midday logical date), so
+    the A7 audit taken after both filters is the audit of the parsed
+    window alone."""
+    import pyarrow as pa
+
+    t = sql_ident(EVENT_TIME_COL)
+    lo = first_day_of_previous_month(when)
+    n, terc = len(times), ("1465011", None, "abc", "9965011")
+    # an Arrow table: a local relation, no Python worker per job
+    raw = spark.createDataFrame(pa.table({
+        "id": list(range(n)), EVENT_TIME_COL: times,
+        "terc": [terc[i % 4] for i in range(n)],
+        "jednostki_numer": pa.array([None] * n, pa.string()),
+        "miasto": ["warsaw"] * n,
+    }))
+    window = (f"{t} > TIMESTAMP {sql_str(str(lo))}"
+              f" AND {t} < TIMESTAMP {sql_str(str(when))}")
+    prefilter = event_text_prefilter(lo, when)
+    flags = parse_event_time(raw.selectExpr("*", f"{prefilter} AS passed")).selectExpr(
+        "id", "passed", f"coalesce({window}, false) AS kept").collect()
+    assert all(r.passed for r in flags if r.kept), \
+        [times[r.id] for r in flags if r.kept and not r.passed]
+    parsed = parse_event_time(raw).filter(window)
+    prefiltered = parse_event_time(raw.filter(prefilter)).filter(window)
+    dim = [("1465", "Warsaw County")]
+    audit = [correction_audit_metrics(correct_terc(df, dim)).first()
+             for df in (parsed, prefiltered)]
+    assert audit[0] == audit[1]
 
 
 def test_first_day_of_previous_month():
@@ -254,10 +354,8 @@ def test_superior_aggregates_excludes_future_months(spark, tmp_path):
     fact_path = str(tmp_path / "fact")
     write_fact_partitioned(fact, fact_path,
                            "data_wplywu_wniosku_do_urzedu", "terc")
-    powiaty = spark.createDataFrame([("1465", "Warszawa")],
-                                    ["JPT_KOD_JE", "JPT_NAZWA_"])
     out = superior_aggregates(
-        spark, fact_path, str(tmp_path / "agg"), powiaty,
+        spark, fact_path, str(tmp_path / "agg"), _dim(spark, [("1465", "Warszawa")]),
         execution_date=dt.datetime(2022, 5, 1),
     )
     row = out.filter("unit_id = '1465'").collect()[0].asDict()
@@ -325,7 +423,8 @@ def test_aggregate_matches_wide_spark_plan(spark, tmp_path):
         [("1465",), ("2261",), (None,), ("0201",), ("1465",)], "JPT_KOD_JE string")
     when = dt.datetime(2022, 5, 1)
 
-    out = superior_aggregates(spark, fact_path, str(tmp_path / "agg"), powiaty, when)
+    dim = county_dim(powiaty.selectExpr("JPT_KOD_JE", "CAST(NULL AS STRING) AS JPT_NAZWA_"))
+    out = superior_aggregates(spark, fact_path, str(tmp_path / "agg"), dim, when)
     want = _wide_spark_aggregate(spark, fact_path, powiaty, when)
     assert out.schema == want.schema
     got = out.collect()
@@ -353,10 +452,9 @@ def test_aggregate_quotes_cell_text(spark, tmp_path):
     fact_path = str(tmp_path / "fact")
     write_fact_partitioned(fact, fact_path,
                            "data_wplywu_wniosku_do_urzedu", "terc")
-    powiaty = spark.createDataFrame([("1465", "Warszawa"), ("0201", "Wroclaw")],
-                                    ["JPT_KOD_JE", "JPT_NAZWA_"])
     out = superior_aggregates(spark, fact_path, str(tmp_path / "agg"),
-                              powiaty, dt.datetime(2022, 5, 1))
+                              _dim(spark, [("1465", "Warszawa"), ("0201", "Wroclaw")]),
+                              dt.datetime(2022, 5, 1))
     name = "Rozbiórka_`x'_\\_żółć_ł|Ź'\\`_3m"
     assert name in out.columns
     counts = {r.unit_id: r[name] for r in out.collect()}

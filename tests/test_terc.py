@@ -14,13 +14,13 @@ from building_permissions_etl_spark.operators.terc import (
 
 
 @pytest.fixture(scope="module")
-def powiaty(spark):
-    rows = [
-        ("0201", "Warsaw County", "POLYGON EMPTY"),
-        ("0202", "New Warsaw County", "POLYGON EMPTY"),
-        ("0463", "Krakow County", "POLYGON EMPTY"),
+def powiaty():
+    """The county dim's (JPT_KOD_JE, JPT_NAZWA_) rows."""
+    return [
+        ("0201", "Warsaw County"),
+        ("0202", "New Warsaw County"),
+        ("0463", "Krakow County"),
     ]
-    return spark.createDataFrame(rows, ["JPT_KOD_JE", "JPT_NAZWA_", "geometry"])
 
 
 SCHEMA = "id int, terc string, jednostki_numer string, miasto string"

@@ -12,7 +12,7 @@ from __future__ import annotations
 import re
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -25,6 +25,13 @@ DIM = [
     ("1465", "Warszawa Capital"),
     ("3062", "poznański"),
     ("2261", "Gdańsk"),
+    (None, "Nullkod Warszawski"),   # a NULL code never wins
+    ("0800", None),                 # a NULL name contains nothing
+    # two names that contain the same city: the smaller code wins,
+    # although it is listed second; matched across non-ASCII case
+    ("1062", "Łódź Wschodnia"),
+    ("1061", "ŁÓDŹ miasto"),
+    ("2402", "Bielsko-Biała (m.)"),  # '(' and '.' match only themselves
 ]
 
 
@@ -45,7 +52,8 @@ def _oracle(terc, jn, miasto):
         else:
             best = None
             if miasto is not None and miasto != "nan":
-                hits = [k for k, n in DIM if miasto.lower() in n.lower()]
+                hits = [k for k, n in DIM
+                        if k is not None and n is not None and miasto.lower() in n.lower()]
                 best = min(hits) if hits else None
             if best is not None:
                 t1, u1 = best, "Matched"
@@ -81,7 +89,8 @@ _jn = st.one_of(
 _miasto = st.one_of(
     st.none(),
     st.sampled_from(["", "nan", "warszawa", "WARSZA", "kraków", "gdańsk",
-                     "pozna", "nomatch", "ó", "a"]),
+                     "pozna", "nomatch", "ó", "a", "nullkod", ".", "(", "%", "_",
+                     "ŁÓDŹ", "łódź", "wschodnia"]),
 )
 _row = st.tuples(_terc, _jn, _miasto)
 
@@ -90,15 +99,17 @@ _row = st.tuples(_terc, _jn, _miasto)
 @settings(max_examples=12, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(rows=st.lists(_row, min_size=1, max_size=40))
+# every fuzzy-branch case once, whatever the random examples draw
+@example(rows=[(None, None, c) for c in
+               ("", "nullkod", ".", "(", "%", "_", "ŁÓDŹ", "łódź", "wschodnia")])
 def test_terc_tree_matches_python_oracle(spark, rows):
     src = spark.createDataFrame(
         [(i, t, j, m) for i, (t, j, m) in enumerate(rows)],
         "id long, terc string, jednostki_numer string, miasto string",
     )
-    dim = spark.createDataFrame(DIM, ["JPT_KOD_JE", "JPT_NAZWA_"])
     got = {
         r["id"]: (r["terc"], r["untypical"])
-        for r in correct_terc(src, dim).select("id", "terc", "untypical").collect()
+        for r in correct_terc(src, DIM).select("id", "terc", "untypical").collect()
     }
     for i, (t, j, m) in enumerate(rows):
         assert got[i] == _oracle(t, j, m), (i, t, j, m)
